@@ -19,7 +19,7 @@ import datetime as dt
 
 from pyspark.sql import DataFrame, SparkSession
 
-from csv_query_engine_spark.io.readers import read_csv
+from csv_query_engine_spark.io.readers import IngestError, read_csv
 from csv_query_engine_spark.nlsql.dialect import duckdb_to_spark_sql
 from csv_query_engine_spark.nlsql.llm import LLMPlanner, RuleBasedPlanner
 from csv_query_engine_spark.nlsql.validator import validate_sql
@@ -67,6 +67,10 @@ class QueryEngine:
 
     def upload_csv(self, path: str, table: str = "df", **options) -> list[ColumnInfo]:
         df = read_csv(self.spark, path, **options)
+        if not df.columns:
+            # reference 400 on an empty upload (pandas EmptyDataError);
+            # checked before register so the loaded table survives
+            raise IngestError("No columns to parse from file")
         return self.register(df, table)
 
     def register(self, df: DataFrame, table: str = "df") -> list[ColumnInfo]:

@@ -18,8 +18,8 @@ reference's ``{"detail": ...}``/400 envelope.
 
 Lifecycle note: unlike the reference (which keeps a pandas frame in a
 module global), Spark re-scans the CSV lazily on every query, so the
-uploaded file is persisted into a per-app temp directory that outlives
-the request.
+uploaded file is persisted, under a fresh name per upload, into a
+per-app temp directory that outlives the request.
 """
 
 from __future__ import annotations
@@ -35,7 +35,6 @@ except ImportError:  # pragma: no cover - flask is present in CI env
     HAS_FLASK = False
 
 from csv_query_engine_spark.engine import EngineError, QueryEngine
-from csv_query_engine_spark.io.readers import IngestError
 from csv_query_engine_spark.nlsql.llm import MissingAPIKeyError
 from csv_query_engine_spark.nlsql.validator import UnsafeSQLError
 
@@ -83,11 +82,15 @@ def create_app(engine: QueryEngine):
         if not f.filename.lower().endswith(".csv"):
             # reference upload.py:21-23, verbatim detail string
             return _err("Only CSV files allowed")
-        path = os.path.join(upload_dir, os.path.basename(f.filename))
-        f.save(path)
+        # A fresh name per upload: the live table reads its file lazily,
+        # so a failed upload must never overwrite it.
+        fd, path = tempfile.mkstemp(suffix=".csv", dir=upload_dir)
         try:
+            with os.fdopen(fd, "wb") as dst:
+                f.save(dst)
             cols = engine.upload_csv(path)
-        except (IngestError, Exception) as e:  # reference wraps ANY parse error as 400
+        except Exception as e:  # reference wraps ANY parse error as 400
+            os.remove(path)
             return _err(f"Error reading CSV: {e}")
         return jsonify(
             {"columns": [{"name": c.name, "type": c.type, "semantic_type": c.semantic_type} for c in cols]}

@@ -5,6 +5,11 @@ duplicated row exists — groups by ALL columns, counts, and sorts desc
 (query.py:49-58). That collapses work onto the driver; here the same
 semantics run *inside the Spark plan* (distributed, pre-collect).
 
+The duplicate probe is an aggregation job, so it runs only when the
+optimized plan cannot prove the rows distinct: a ``GROUP BY`` that
+keeps its keys, ``SELECT DISTINCT``, a global aggregate or ``LIMIT 1``
+cannot hold a duplicated row (:func:`_collapse_probe`).
+
 Null-key policy (documented fix, SURVEY.md §2 A17): pandas groupby
 silently drops rows with NaN in any key; Spark keeps null group keys.
 We keep them — dropping data rows silently is a bug, not a semantic.
@@ -19,20 +24,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def has_duplicate_rows(df: DataFrame) -> bool:
-    """Reference A18 (``result.duplicated().any()``), distributed: any
-    group of all columns with count>1 — probed with an early-exit limit
-    instead of two full counts."""
-    return (
-        df.groupBy(*df.columns)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > 1)
-        .limit(1)
-        .count()
-        > 0
-    )
-
-
 def collapse_duplicates(df: DataFrame, count_col: str = "count") -> DataFrame:
     """Group by all columns, count, sort desc (A17 + A19)."""
     return (
@@ -42,12 +33,30 @@ def collapse_duplicates(df: DataFrame, count_col: str = "count") -> DataFrame:
     )
 
 
+def _scala_iter(iterable):
+    it = iterable.iterator()
+    while it.hasNext():
+        yield it.next()
+
+
 def _collapse_probe(df: DataFrame, count_col: str = "count") -> tuple[DataFrame, bool, DataFrame | None]:
-    """One-pass conditional collapse: the all-columns count aggregate is
-    computed ONCE and persisted; the duplicate flag is probed from the
-    cached aggregate and the collapsed plan reuses it (A17+A18+A19 in a
-    single aggregation job instead of two). Returns (plan, collapsed,
-    cached) — the caller must unpersist ``cached`` after materializing."""
+    """Conditional collapse (A17+A18+A19), skipped without a job when the
+    optimized plan proves the rows distinct: some set in Catalyst's
+    ``distinctKeys`` (which its redundant-aggregate rules rely on) holds
+    only output attributes, so two equal rows would repeat a key value
+    the plan guarantees unique; an empty set means at most one row.
+    With ``spark.sql.optimizer.propagateDistinctKeys.enabled`` off no
+    key is known and every result is probed.  The probe persists the
+    all-columns count aggregate once; the duplicate flag and the
+    collapsed plan both read it.  Returns (plan, collapsed, cached) —
+    the caller must unpersist ``cached`` after materializing."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    output = plan.outputSet()
+    if any(
+        all(e.getClass().getSimpleName() == "AttributeReference" and output.contains(e) for e in _scala_iter(key))
+        for key in _scala_iter(plan.distinctKeys())
+    ):
+        return df, False, None
     # Internal alias: the result may itself carry a `count` column (any
     # GROUP BY ... COUNT(*) AS count query) and the probe filter must not
     # be ambiguous. Renamed to the public name only on the collapse path.
@@ -62,8 +71,8 @@ def _collapse_probe(df: DataFrame, count_col: str = "count") -> tuple[DataFrame,
 
 
 def collapse_if_duplicated(df: DataFrame) -> tuple[DataFrame, bool]:
-    """The reference's conditional collapse (query.py:49-58). Probes via
-    the one-pass aggregate; the cache is dropped before returning so
+    """The reference's conditional collapse (query.py:49-58) through
+    :func:`_collapse_probe`; the cache is dropped before returning so
     direct callers own no persist lifecycle (:func:`materialize` uses
     :func:`_collapse_probe` directly and keeps the cache warm through
     its collect)."""

@@ -19,7 +19,7 @@ from csv_query_engine_spark.engine import (
 )
 from csv_query_engine_spark.io.readers import IngestError, read_csv
 from csv_query_engine_spark.nlsql.validator import UnsafeSQLError
-from csv_query_engine_spark.postprocess import collapse_duplicates, collapse_if_duplicated
+from csv_query_engine_spark.postprocess import collapse_duplicates, collapse_if_duplicated, materialize
 
 NOW = dt.date(2024, 2, 15)
 
@@ -103,6 +103,69 @@ def test_collapse_noop_when_unique(spark):
     out, collapsed = collapse_if_duplicated(df)
     assert not collapsed
     assert out.count() == 5
+
+
+# Result shapes whose optimized plan proves the rows distinct: the
+# duplicate-collapse probe must be skipped.
+SKIP_SHAPES = {
+    "group_by_keys_kept": "SELECT City, Service, COUNT(*) AS count FROM df GROUP BY City, Service",
+    "global_aggregate": "SELECT COUNT(*) AS n, MAX(severity) AS top FROM df",
+    "select_distinct": "SELECT DISTINCT City, severity FROM df",
+    "limit_1": "SELECT City, Service FROM df ORDER BY City, Service LIMIT 1",
+}
+# Shapes the plan cannot prove distinct, and that do repeat a row on
+# the incidents fixture: the probe must run and collapse.
+PROBE_SHAPES = {
+    "group_by_key_dropped": "SELECT severity FROM df GROUP BY City, severity",
+    "union_all_of_group_bys": (
+        "SELECT City, COUNT(*) AS n FROM df GROUP BY City "
+        "UNION ALL SELECT City, COUNT(*) AS n FROM df GROUP BY City"
+    ),
+}
+
+
+def _materialize_counting_jobs(spark, sql, tag, distinct_keys=True):
+    """(result, jobs run by materialize); ``distinct_keys=False`` turns
+    Catalyst's distinct-key propagation off for this call only, which
+    forces the always-probe path."""
+    sc = spark.sparkContext
+    conf = "spark.sql.optimizer.propagateDistinctKeys.enabled"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, str(distinct_keys).lower())
+    sc.setJobGroup(tag, tag)
+    try:
+        res = materialize(spark.sql(sql), sql)
+    finally:
+        sc.setJobGroup("idle", "idle")
+        spark.conf.set(conf, old)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return res, len(sc.statusTracker().getJobIdsForGroup(tag))
+
+
+def _row_bag(res):
+    return sorted(repr(r) for r in res.rows)
+
+
+@pytest.mark.parametrize("shape", sorted(SKIP_SHAPES))
+def test_collapse_probe_skipped_when_plan_proves_distinct(spark, engine, shape):
+    sql = SKIP_SHAPES[shape]
+    res, jobs = _materialize_counting_jobs(spark, sql, f"skip-{shape}")
+    probed, probe_jobs = _materialize_counting_jobs(spark, sql, f"probe-{shape}", distinct_keys=False)
+    assert not res.collapsed and not probed.collapsed
+    assert jobs < probe_jobs, (jobs, probe_jobs)
+    assert res.columns == probed.columns
+    assert _row_bag(res) == _row_bag(probed)
+
+
+@pytest.mark.parametrize("shape", sorted(PROBE_SHAPES))
+def test_collapse_probe_runs_when_plan_cannot_prove_distinct(spark, engine, shape):
+    sql = PROBE_SHAPES[shape]
+    res, _ = _materialize_counting_jobs(spark, sql, f"keep-{shape}")
+    off, _ = _materialize_counting_jobs(spark, sql, f"keep-off-{shape}", distinct_keys=False)
+    assert res.collapsed and off.collapsed
+    assert res.columns[-1] == "count" and res.columns == off.columns
+    assert res.rows == off.rows
+    assert sum(r["count"] for r in res.rows) == spark.sql(sql).count()
 
 
 def test_orc_roundtrip(spark, tmp_path):

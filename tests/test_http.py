@@ -83,6 +83,30 @@ def test_upload_then_flagship_query(client):
     assert body["execution_time"] > 0
 
 
+def test_failed_reupload_keeps_loaded_table(spark):
+    """An empty CSV is a 400 (reference: "No columns to parse from
+    file"), and a failed re-upload under the SAME filename leaves the
+    loaded table answering from the first file."""
+    app = create_app(QueryEngine(spark, now=NOW))
+    app.config["TESTING"] = True
+    c = app.test_client()
+
+    def upload(data: bytes):
+        return c.post(
+            "/upload",
+            data={"file": (io.BytesIO(data), "data.csv")},
+            content_type="multipart/form-data",
+        )
+
+    assert upload(_incidents_csv_bytes()).status_code == 200
+    bad = upload(b"")
+    assert bad.status_code == 400
+    assert "No columns to parse from file" in bad.get_json()["detail"]
+    q = c.post("/query", json={"question": "which city", "use_ai": False})
+    assert q.status_code == 200, q.get_json()
+    assert {r["City"]: r["count"] for r in q.get_json()["rows"]} == {"Mumbai": 23, "Delhi": 4}
+
+
 def test_empty_question_is_400(client):
     r = client.post("/query", json={"question": "   "})
     assert r.status_code == 400

@@ -15,7 +15,7 @@ from hypothesis import strategies as st
 from csv_query_engine_spark.nlsql.generator import CITIES, generate_sql_rule_based
 from csv_query_engine_spark.nlsql.validator import validate_sql
 from csv_query_engine_spark.pipeline.dedup import _simhash64
-from csv_query_engine_spark.postprocess import collapse_duplicates
+from csv_query_engine_spark.postprocess import collapse_duplicates, materialize
 
 COLS = [
     {"name": "City", "type": "string", "semantic_type": "city"},
@@ -74,6 +74,49 @@ def test_collapse_invariant_counts_preserved(spark, rows):
     out = collapse_duplicates(df).collect()
     assert sum(r["count"] for r in out) == len(rows)
     assert len(out) == df.distinct().count()
+
+
+COLLAPSE_SHAPES = (
+    "SELECT * FROM prop_t",
+    "SELECT k FROM prop_t",
+    "SELECT k, COUNT(*) AS n FROM prop_t GROUP BY k",
+    "SELECT v FROM prop_t GROUP BY k, v",
+    "SELECT DISTINCT k, v FROM prop_t",
+    "SELECT COUNT(DISTINCT v) AS d, MIN(k) AS lo FROM prop_t",
+    "SELECT k, v FROM prop_t ORDER BY k, v LIMIT 1",
+    "SELECT k FROM prop_t GROUP BY k UNION ALL SELECT k FROM prop_t GROUP BY k",
+    "SELECT a.k, b.m FROM (SELECT DISTINCT k FROM prop_t) a "
+    "JOIN (SELECT k, MAX(v) AS m FROM prop_t GROUP BY k) b ON a.k = b.k",
+    "SELECT a.k, a.v FROM prop_t a LEFT JOIN (SELECT DISTINCT k FROM prop_t) b ON a.k = b.k",
+)
+
+
+@given(
+    rows=st.lists(
+        st.tuples(st.sampled_from(["a", "b", None]), st.sampled_from([1, 2, None])),
+        min_size=1,
+        max_size=10,
+    ),
+    sql=st.sampled_from(COLLAPSE_SHAPES),
+)
+@settings(max_examples=30, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_materialize_collapse_matches_always_probe_oracle(spark, rows, sql):
+    """Skipping the duplicate probe on plan-proven distinct results is
+    invisible: rows, columns and the collapsed flag equal an oracle that
+    always counts duplicates (reference A17/A18)."""
+    # An inline VALUES table keeps every job JVM-only (no Python workers).
+    values = ", ".join("(%s, %s)" % tuple("NULL" if x is None else repr(x) for x in r) for r in rows)
+    spark.sql(
+        f"SELECT CAST(k AS STRING) AS k, CAST(v AS INT) AS v FROM VALUES {values} AS t(k, v)"
+    ).createOrReplaceTempView("prop_t")
+    df = spark.sql(sql)
+    res = materialize(df, sql)
+    collapsed = df.count() != df.distinct().count()
+    want = collapse_duplicates(df) if collapsed else df
+    assert res.collapsed == collapsed
+    assert res.columns == want.columns
+    want_rows = [r.asDict(recursive=True) for r in want.limit(200).collect()]
+    assert sorted(map(repr, res.rows)) == sorted(map(repr, want_rows))
 
 
 @given(
