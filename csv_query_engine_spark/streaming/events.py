@@ -16,6 +16,8 @@ keeps only the watermark horizon in the state store.
 
 from __future__ import annotations
 
+from typing import Callable, NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -495,6 +497,112 @@ def enrich_with_dim(stream: DataFrame, dim: DataFrame, on: str, how: str = "left
     return stream.join(F.broadcast(dim), on, how)
 
 
+# ------------------------------------------------ batch-store mechanics
+#
+# Every streaming store below goes through these helpers: one
+# batch-partition write, one missing-path read rule, one Hadoop-FS
+# lookup, one partition delete and one foreachBatch runner.
+
+
+def _write_batch(df: DataFrame, path: str, batch_id: int | None = None) -> None:
+    """The batch-partition write of every accumulated store: stamp
+    ``batch_id`` (frames that already carry it — reconcile rewrites,
+    MIN/MAX compaction — pass None) and write parquet partitioned by
+    ``batch_id`` with DYNAMIC partition overwrite, so a replayed batch
+    rewrites its own partition instead of appending (the round-7/8
+    replay idiom)."""
+    if batch_id is not None:
+        df = df.withColumn("batch_id", F.lit(int(batch_id)))
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(path)
+    )
+
+
+def _read_store_or_empty(spark: SparkSession, path: str, schema) -> DataFrame:
+    """Explicit-schema store read where ONLY a missing path reads as
+    empty (the first batch); any other AnalysisException fails the
+    batch so the checkpoint retries (round-9 store-reader rule) — an
+    empty-store fallback would durably write wrong verdicts that a
+    replay then reproduces.  ``schema`` is a DDL string or StructType."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.schema(schema).parquet(path)
+    except AnalysisException as e:
+        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
+            return spark.createDataFrame([], schema)
+        raise
+
+
+def _run_batches(stream: DataFrame, checkpoint: str, route, **kwargs):
+    """Start ``stream`` as a checkpointed foreachBatch query calling
+    ``route(batch_df, batch_id, **kwargs)`` per micro-batch over what
+    is available now; returns the started query (callers
+    ``awaitTermination``)."""
+    return (
+        stream.writeStream.foreachBatch(lambda df, b: route(df, b, **kwargs))
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _store_fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path, JVM) for a store path — the one
+    Hadoop-FS lookup of this module."""
+    jvm = spark._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
+
+
+def _unescape_path_name(name: str) -> str:
+    """Decode Spark's partition-directory percent-escaping (the inverse
+    of ExternalCatalogUtils.escapePathName: ``%XX`` hex pairs for the
+    reserved/control characters, everything else literal)."""
+    out: list[str] = []
+    i = 0
+    while i < len(name):
+        c = name[i]
+        if c == "%" and i + 2 < len(name):
+            try:
+                out.append(chr(int(name[i + 1 : i + 3], 16)))
+                i += 3
+                continue
+            except ValueError:
+                pass
+        out.append(c)
+        i += 1
+    return "".join(out)
+
+
+def _delete_partitions(spark: SparkSession, root_dir: str, col: str, values) -> int:
+    """Delete the ``{col}=...`` partition directories under ``root_dir``
+    whose value is in ``values`` (string forms).  Matching is on the
+    percent-DECODED value part of LISTED directory names, so whatever
+    escaping Spark applied when writing is matched exactly (ADVICE
+    round 10 — never f-string a raw value into a path).  Idempotent:
+    an absent directory is simply not listed.  Returns how many
+    directories were removed."""
+    if not values:
+        return 0
+    fs, root, _ = _store_fs(spark, root_dir)
+    prefix = f"{col}="
+    removed = 0
+    for st in fs.listStatus(root):
+        name = st.getPath().getName()
+        if (
+            st.isDirectory()
+            and name.startswith(prefix)
+            and _unescape_path_name(name[len(prefix):]) in values
+        ):
+            fs.delete(st.getPath(), True)
+            removed += 1
+    return removed
+
+
 def route_quality_batch(batch_df, batch_id: int, checks, good_path: str, quarantine_path: str):
     """One micro-batch of the streaming dead-letter gate: split by the
     row-level constraints, then write each side keyed by ``batch_id``
@@ -512,13 +620,7 @@ def route_quality_batch(batch_df, batch_id: int, checks, good_path: str, quarant
 
     good, bad = split_by_rules(batch_df, checks)
     for side, path in ((good, good_path), (bad, quarantine_path)):
-        (
-            side.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
+        _write_batch(side, path, batch_id)
 
 
 def quality_gate_stream(
@@ -544,15 +646,9 @@ def quality_gate_stream(
     streaming face of the quality layer: check_constraints gates a
     BATCH before publication, split_by_rules routes a STREAM row by
     row."""
-
-    def route(batch_df, batch_id):
-        route_quality_batch(batch_df, batch_id, checks, good_path, quarantine_path)
-
-    return (
-        stream.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _run_batches(
+        stream, checkpoint, route_quality_batch,
+        checks=checks, good_path=good_path, quarantine_path=quarantine_path,
     )
 
 
@@ -609,21 +705,14 @@ def route_admission_batch(
         SF.lit("exact_dup").alias("verdict"),
         SF.col("_keep").cast("long").alias("dup_of"),
     )
-    try:
-        corpus = (
-            spark.read.parquet(admitted_dir)
-            .filter(SF.col("batch_id") < int(batch_id))
-            .select("doc_id", "text")
-        )
-        have_corpus = True
-    except Exception:  # first batch: no store yet
-        have_corpus = False
-    if have_corpus:
-        verdicts = incremental_dedup(batch_kept, corpus, threshold=threshold)
-    else:
-        verdicts = batch_kept.select(
-            "doc_id", SF.lit("admit").alias("verdict"), SF.lit(-1).cast("long").alias("dup_of")
-        )
+    # only a MISSING store is a first batch (it screens against an
+    # empty corpus); an unreadable one fails the batch
+    corpus = (
+        _read_store_or_empty(spark, admitted_dir, "doc_id BIGINT, text STRING, batch_id BIGINT")
+        .filter(SF.col("batch_id") < int(batch_id))
+        .select("doc_id", "text")
+    )
+    verdicts = incremental_dedup(batch_kept, corpus, threshold=threshold)
     admitted = batch_kept.join(
         verdicts.filter(SF.col("verdict") == "admit").select("doc_id"), "doc_id"
     )
@@ -631,13 +720,7 @@ def route_admission_batch(
         batch_exact_dropped
     )
     for side, path in ((admitted, admitted_dir), (rejected, rejected_dir)):
-        (
-            side.withColumn("batch_id", SF.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
+        _write_batch(side, path, batch_id)
 
 
 def dedup_admission_stream(
@@ -656,31 +739,284 @@ def dedup_admission_stream(
     the id it duplicates. Checkpoint offsets + batch_id-keyed dynamic
     partition overwrites + the pre-batch corpus filter make the result
     effectively-once under replay."""
-
-    def route(batch_df, batch_id):
-        route_admission_batch(
-            batch_df, batch_id, admitted_dir, rejected_dir, threshold=threshold
-        )
-
-    return (
-        stream.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    return _run_batches(
+        stream, checkpoint, route_admission_batch,
+        admitted_dir=admitted_dir, rejected_dir=rejected_dir, threshold=threshold,
     )
 
 
-def _read_store_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    """Explicit-schema store read where ONLY a missing path reads as
-    empty (the first batch); any other AnalysisException fails the
-    batch so the checkpoint retries (round-9 store-reader rule)."""
-    from pyspark.errors import AnalysisException
+# ------------------------------------- bucket-MIN admission (one core)
 
+
+class _BucketMinFamily(NamedTuple):
+    """What one bucket-MIN admission family (MinHash over shingles,
+    semantic over quantized vectors) plugs into the shared core
+    (:func:`_route_bucket_min_batch` / :func:`_reconcile_bucket_min`)
+    — the core itself never asks which family it serves.
+
+    Internally every frame keys on ``id``; stores key on ``id_col``.
+    ``payload(rows)`` turns stored/batch rows (``id_col`` + the raw
+    ``table`` columns) into the verify payload (``id`` + payload
+    columns); ``entries(payload)`` gives (id, band, bucket);
+    ``score(a, b)`` is the verify similarity, where ``a``/``b`` map a
+    payload column name to that side's Column; ``spine(payload)`` is
+    the frame of docs/vectors that get a verdict row."""
+
+    id_col: str
+    score_col: str
+    table: str
+    table_cols: str
+    bucket_type: str
+    payload: Callable
+    entries: Callable
+    score: Callable
+    spine: Callable
+
+    def schema(self, sub: str) -> str:
+        """Explicit read schema of store table ``sub``."""
+        cols = {
+            "mins": f"band INT, bucket {self.bucket_type}, min_id BIGINT",
+            "entries": f"{self.id_col} BIGINT, band INT, bucket {self.bucket_type}",
+            "verdicts": f"{self.id_col} BIGINT, is_dup BOOLEAN, dup_of BIGINT, "
+            f"{self.score_col} DOUBLE",
+            self.table: f"{self.id_col} BIGINT, {self.table_cols}",
+        }[sub]
+        return cols + ", batch_id BIGINT"
+
+
+def _minhash_family(
+    shingle_k: int = 5, hash_mode: str = "xxhash64", num_hashes: int = 64, bands: int = 16
+) -> _BucketMinFamily:
+    """Shingle hashes + exact Jaccard; the verdict spine is the docs
+    that produced ≥1 shingle — exactly the batch operator's
+    sig-derived spine (a doc shorter than ``shingle_k`` has no
+    signature row there, so it must have no verdict row here either or
+    the pinned stream==batch equality diverges on degenerate inputs;
+    round-13 ADVICE fix).  The docs store still keeps EVERY batch doc."""
+    from csv_query_engine_spark.pipeline.dedup import (
+        _band_entries,
+        _hashed_shingles,
+        _oph_signatures,
+        jaccard,
+    )
+
+    return _BucketMinFamily(
+        id_col="doc_id",
+        score_col="dup_jaccard",
+        table="docs",
+        table_cols="text STRING",
+        bucket_type="STRING" if hash_mode == "md5" else "BIGINT",
+        payload=lambda rows: _hashed_shingles(
+            rows, "doc_id", "text", shingle_k, hash_mode
+        ).select("id", "hashes"),
+        entries=lambda pay: _band_entries(
+            _oph_signatures(pay, num_hashes, hash_bits=32 if hash_mode == "md5" else 64),
+            num_hashes,
+            bands,
+            hash_mode,
+        ),
+        score=lambda a, b: jaccard(a("hashes"), b("hashes")),
+        spine=lambda pay: pay.filter(F.size("hashes") > 0),
+    )
+
+
+def _semantic_family(n_planes: int = 64, n_bands: int = 8, dim: int = 64) -> _BucketMinFamily:
+    """Quantized vectors (+ their quantized norm) + the verify cosine
+    (``similarity.quantized_cosine``); the spine is every vector — the
+    batch operator's spine is the vector table itself (unlike
+    shingles, every vector buckets)."""
+    from csv_query_engine_spark.pipeline import similarity as sim
+
+    return _BucketMinFamily(
+        id_col="vec_id",
+        score_col="dup_cosine",
+        table="vecs",
+        table_cols="embedding ARRAY<FLOAT>",
+        bucket_type="INT",
+        payload=lambda rows: rows.select(
+            F.col("vec_id").alias("id"),
+            "embedding",
+            sim._quantized_norm(F.col("embedding")).alias("nq"),
+        ),
+        entries=lambda pay: pay.select(
+            "id",
+            F.posexplode(
+                sim.quantized_band_buckets_udf(
+                    sim._quantized_planes(n_planes, dim), n_bands
+                )(F.col("embedding"))
+            ).alias("band", "bucket"),
+        ),
+        score=lambda a, b: sim.quantized_cosine(
+            a("embedding"), b("embedding"), a("nq"), b("nq")
+        ),
+        spine=lambda pay: pay,
+    )
+
+
+def _verified_dups(
+    cand: DataFrame, pay_a: DataFrame, pay_b: DataFrame, fam: _BucketMinFamily, threshold: float
+) -> DataFrame:
+    """(id, dup_of, _score): the SMALLEST verified candidate per id —
+    ``cand`` (id, cand) pairs scored on the payloads of both sides and
+    kept at ``score >= threshold``."""
+
+    def side(pay, key, sfx):
+        return pay.select(
+            F.col("id").alias(key), *[F.col(c).alias(c + sfx) for c in pay.columns if c != "id"]
+        )
+
+    score = fam.score(lambda c: F.col(c + "_a"), lambda c: F.col(c + "_b"))
+    return (
+        cand.join(side(pay_a, "id", "_a"), "id")
+        .join(side(pay_b, "cand", "_b"), "cand")
+        .select("id", "cand", score.alias("_score"))
+        .filter(F.col("_score") >= F.lit(float(threshold)))
+        .groupBy("id")
+        .agg(F.min(F.struct(F.col("cand"), F.col("_score"))).alias("m"))
+        .select("id", F.col("m.cand").alias("dup_of"), F.col("m._score").alias("_score"))
+    )
+
+
+def _verdict_rows(ids: DataFrame, dup: DataFrame, fam: _BucketMinFamily, *extra) -> DataFrame:
+    """Verdict rows for ``ids`` — the batch operator's exact output
+    columns and -1/-1.0 sentinels."""
+    return ids.join(dup, "id", "left").select(
+        F.col("id").alias(fam.id_col),
+        F.col("dup_of").isNotNull().alias("is_dup"),
+        F.coalesce(F.col("dup_of"), F.lit(-1)).cast("bigint").alias("dup_of"),
+        F.coalesce(F.col("_score"), F.lit(-1.0)).alias(fam.score_col),
+        *extra,
+    )
+
+
+def _route_bucket_min_batch(
+    batch: DataFrame, batch_id: int, store_dir: str, fam: _BucketMinFamily, threshold: float
+) -> None:
+    """The shared per-batch pipeline of both bucket-MIN admissions
+    (see :func:`route_minhash_admission_batch` for the protocol).
+    ``batch`` is (``fam.id_col`` + the ``fam.table`` columns)."""
+    from pyspark.storagelevel import StorageLevel
+
+    spark = batch.sparkSession
+    # the payload feeds the band build AND the verify join (and the
+    # spine) — persist once, release in finally
+    pay = fam.payload(batch).persist(StorageLevel.MEMORY_AND_DISK)
+    cached = [pay]
     try:
-        return spark.read.schema(schema).parquet(path)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return spark.createDataFrame([], schema)
-        raise
+        be = fam.entries(pay).persist(StorageLevel.MEMORY_AND_DISK)
+        cached.append(be)
+        batch_mins = be.groupBy("band", "bucket").agg(F.min("id").alias("min_id"))
+        prev_mins = (
+            _read_store_or_empty(spark, f"{store_dir}/mins", fam.schema("mins"))
+            .filter(F.col("batch_id") < int(batch_id))
+            .select("band", "bucket", "min_id")
+        )
+        merged = (
+            prev_mins.unionByName(batch_mins)
+            .groupBy("band", "bucket")
+            .agg(F.min("min_id").alias("min_id"))
+        )
+        cand = (
+            be.join(merged, ["band", "bucket"])
+            .filter(F.col("id") != F.col("min_id"))
+            .select("id", F.col("min_id").alias("cand"))
+            .distinct()
+        )
+        # candidate payloads: within-batch candidates from ``pay``;
+        # earlier-batch candidates re-built from the table store,
+        # restricted to the (bounded, ≤ bands×|batch|) candidate id set
+        prev_rows = (
+            _read_store_or_empty(spark, f"{store_dir}/{fam.table}", fam.schema(fam.table))
+            .filter(F.col("batch_id") < int(batch_id))
+            .drop("batch_id")
+            .join(
+                F.broadcast(cand.select(F.col("cand").alias(fam.id_col)).distinct()),
+                fam.id_col,
+                "left_semi",
+            )
+        )
+        dup = _verified_dups(
+            cand, pay, pay.unionByName(fam.payload(prev_rows)), fam, threshold
+        )
+        verdicts = _verdict_rows(fam.spine(pay).select("id"), dup, fam)
+        entries = be.select(F.col("id").alias(fam.id_col), "band", "bucket")
+        for side, sub in (
+            (batch, fam.table),
+            (batch_mins, "mins"),
+            (entries, "entries"),
+            (verdicts, "verdicts"),
+        ):
+            _write_batch(side, f"{store_dir}/{sub}", batch_id)
+        # a (re)written batch at or below the reconciliation watermark
+        # carries fresh GREEDY verdicts — invalidate the watermark so
+        # the next reconcile re-detects from scratch
+        wm = _read_reconcile_watermark(spark, store_dir)
+        if wm is not None and int(batch_id) <= wm:
+            _drop_reconcile_watermark(spark, store_dir)
+    finally:
+        for df in cached:
+            df.unpersist()
+
+
+def _reconcile_bucket_min(
+    spark: SparkSession, store_dir: str, fam: _BucketMinFamily, threshold: float
+) -> int:
+    """The shared reconciliation pass of both bucket-MIN admissions
+    (see :func:`reconcile_minhash_admission` for the protocol)."""
+    from pyspark.storagelevel import StorageLevel
+
+    mins = _read_store_or_empty(spark, f"{store_dir}/mins", fam.schema("mins"))
+    entries = _read_store_or_empty(
+        spark, f"{store_dir}/entries", fam.schema("entries")
+    ).withColumnRenamed(fam.id_col, "id")
+    affected, newest = _stale_min_affected(spark, store_dir, mins, entries, "id")
+    if affected is None:
+        return 0
+    try:
+        n_affected = affected.count()
+        if n_affected == 0:
+            _write_reconcile_watermark(spark, store_dir, int(newest))
+            return 0
+        finals = mins.groupBy("band", "bucket").agg(F.min("min_id").alias("cand"))
+        cand = (
+            entries.join(affected.select("id"), "id", "left_semi")
+            .join(finals, ["band", "bucket"])
+            .filter(F.col("id") != F.col("cand"))
+            .select("id", "cand")
+            .distinct()
+        )
+        need_ids = (
+            affected.select(F.col("id").alias(fam.id_col))
+            .unionByName(cand.select(F.col("cand").alias(fam.id_col)))
+            .distinct()
+        )
+        rows = (
+            _read_store_or_empty(spark, f"{store_dir}/{fam.table}", fam.schema(fam.table))
+            .drop("batch_id")
+            .join(need_ids, fam.id_col, "left_semi")
+        )
+        pay = fam.payload(rows).persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            new_rows = _verdict_rows(
+                affected, _verified_dups(cand, pay, pay, fam, threshold), fam, "batch_id"
+            )
+            old = (
+                _read_store_or_empty(spark, f"{store_dir}/verdicts", fam.schema("verdicts"))
+                .join(affected.select("batch_id").distinct(), "batch_id", "left_semi")
+                .join(affected.select(F.col("id").alias(fam.id_col)), fam.id_col, "left_anti")
+                .select(*new_rows.columns)
+            )
+            out = old.unionByName(new_rows).localCheckpoint(eager=True)
+            try:
+                _write_batch(out, f"{store_dir}/verdicts")
+            finally:
+                out.unpersist()
+        finally:
+            pay.unpersist()
+        _write_reconcile_watermark(spark, store_dir, int(newest))
+        return n_affected
+    finally:
+        affected.unpersist()
 
 
 def route_minhash_admission_batch(
@@ -751,131 +1087,13 @@ def route_minhash_admission_batch(
     bucket-min lookups/doc against a store that is O(distinct buckets)
     — never O(corpus); candidate re-shingling touches ≤ bands×|batch|
     store docs via a broadcastable id semi-join."""
-    from pyspark.storagelevel import StorageLevel
-
-    from csv_query_engine_spark.pipeline.dedup import (
-        _band_entries,
-        _hashed_shingles,
-        _oph_signatures,
-        jaccard,
-    )
-
-    spark = batch_df.sparkSession
-    bucket_sql_type = "STRING" if hash_mode == "md5" else "BIGINT"
-    mins_schema = f"band INT, bucket {bucket_sql_type}, min_id BIGINT, batch_id BIGINT"
-    docs_schema = "doc_id BIGINT, text STRING, batch_id BIGINT"
-
     batch = batch_df.select(
         F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("text")
     )
-    # hashed shingles feed the band build AND the verify join (and the
-    # batch feeds docs-store write) — persist once, release in finally
-    hashed_b = (
-        _hashed_shingles(batch, "doc_id", "text", shingle_k, hash_mode)
-        .select("id", "hashes")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    _route_bucket_min_batch(
+        batch, batch_id, store_dir,
+        _minhash_family(shingle_k, hash_mode, num_hashes, bands), threshold,
     )
-    try:
-        sig_b = _oph_signatures(
-            hashed_b, num_hashes, hash_bits=32 if hash_mode == "md5" else 64
-        )
-        be_b = _band_entries(sig_b, num_hashes, bands, hash_mode).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        batch_mins = be_b.groupBy("band", "bucket").agg(F.min("id").alias("min_id"))
-        prev_mins = (
-            _read_store_or_empty(spark, f"{store_dir}/mins", mins_schema)
-            .filter(F.col("batch_id") < int(batch_id))
-            .select("band", "bucket", "min_id")
-        )
-        merged = (
-            prev_mins.unionByName(batch_mins)
-            .groupBy("band", "bucket")
-            .agg(F.min("min_id").alias("min_id"))
-        )
-        cand = (
-            be_b.join(merged, ["band", "bucket"])
-            .filter(F.col("id") != F.col("min_id"))
-            .select("id", F.col("min_id").alias("cand"))
-            .distinct()
-        )
-        # candidate shingles: within-batch candidates from hashed_b;
-        # earlier-batch candidates re-shingled from the docs store,
-        # restricted to the (bounded, ≤ bands×|batch|) candidate id set
-        prev_docs = (
-            _read_store_or_empty(spark, f"{store_dir}/docs", docs_schema)
-            .filter(F.col("batch_id") < int(batch_id))
-            .select("doc_id", "text")
-            .join(
-                F.broadcast(cand.select(F.col("cand").alias("doc_id")).distinct()),
-                "doc_id",
-                "left_semi",
-            )
-        )
-        cand_hashes = hashed_b.unionByName(
-            _hashed_shingles(prev_docs, "doc_id", "text", shingle_k, hash_mode).select(
-                "id", "hashes"
-            )
-        )
-        verified = (
-            cand.join(hashed_b.select(F.col("id"), F.col("hashes").alias("h_a")), "id")
-            .join(
-                cand_hashes.select(F.col("id").alias("cand"), F.col("hashes").alias("h_b")),
-                "cand",
-            )
-            .select("id", "cand", jaccard(F.col("h_a"), F.col("h_b")).alias("j"))
-            .filter(F.col("j") >= threshold)
-        )
-        dup = (
-            verified.groupBy("id")
-            .agg(F.min(F.struct(F.col("cand"), F.col("j"))).alias("m"))
-            .select(
-                "id", F.col("m.cand").alias("dup_of"), F.col("m.j").alias("dup_jaccard")
-            )
-        )
-        # verdict SPINE = docs that produced ≥1 shingle — exactly the
-        # batch operator's sig-derived spine (a doc shorter than
-        # shingle_k has no signature row there, so it must have no
-        # verdict row here either or the pinned stream==batch equality
-        # diverges on degenerate inputs; round-13 ADVICE fix).  The
-        # docs store still keeps EVERY batch doc.
-        verdicts = (
-            hashed_b.filter(F.size("hashes") > 0)
-            .select(F.col("id").alias("doc_id"))
-            .join(dup.withColumnRenamed("id", "doc_id"), "doc_id", "left")
-            .select(
-                "doc_id",
-                F.col("dup_of").isNotNull().alias("is_dup"),
-                F.coalesce(F.col("dup_of"), F.lit(-1)).cast("bigint").alias("dup_of"),
-                F.coalesce(F.col("dup_jaccard"), F.lit(-1.0)).alias("dup_jaccard"),
-            )
-        )
-        entries = be_b.select(F.col("id").alias("doc_id"), "band", "bucket")
-        for side, sub in (
-            (batch, "docs"),
-            (batch_mins, "mins"),
-            (entries, "entries"),
-            (verdicts, "verdicts"),
-        ):
-            (
-                side.withColumn("batch_id", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(f"{store_dir}/{sub}")
-            )
-        # a (re)written batch at or below the reconciliation watermark
-        # carries fresh GREEDY verdicts — invalidate the watermark so
-        # the next reconcile_minhash_admission re-detects from scratch
-        wm = _read_reconcile_watermark(spark, store_dir)
-        if wm is not None and int(batch_id) <= wm:
-            _drop_reconcile_watermark(spark, store_dir)
-    finally:
-        hashed_b.unpersist()
-        try:
-            be_b.unpersist()
-        except NameError:
-            pass
 
 
 def minhash_admission_stream(
@@ -888,21 +1106,15 @@ def minhash_admission_stream(
     """Streaming MinHash admission: foreachBatch routes every
     micro-batch through :func:`route_minhash_admission_batch` — the
     linear (bucket-MIN) dedup face running continuously, completing the
-    family's batch/streaming symmetry (CM/HLL/HDR/BM25/census/
-    contamination all have both faces).  Checkpoint offsets +
+    family's batch/streaming symmetry (CM/HLL/HDR/BM25/centroid/vocab
+    have stream wrappers too; census and contamination expose their
+    per-batch ``route_*`` functions for a caller's foreachBatch).
+    Checkpoint offsets +
     batch_id-keyed dynamic overwrite + the pre-batch read guard make it
     effectively-once under replay."""
-
-    def route(batch_df, batch_id):
-        route_minhash_admission_batch(
-            batch_df, batch_id, store_dir, threshold=threshold, **kwargs
-        )
-
-    return (
-        stream.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _run_batches(
+        stream, checkpoint, route_minhash_admission_batch,
+        store_dir=store_dir, threshold=threshold, **kwargs,
     )
 
 
@@ -913,9 +1125,8 @@ def read_minhash_bucket_mins(
     admission state (the mergeable contract — MIN is the third
     aggregate in the store family after SUM and MAX; compacting old
     batch partitions into one is the same MIN)."""
-    t = "STRING" if hash_mode == "md5" else "BIGINT"
     mins = _read_store_or_empty(
-        spark, f"{store_dir}/mins", f"band INT, bucket {t}, min_id BIGINT, batch_id BIGINT"
+        spark, f"{store_dir}/mins", _minhash_family(hash_mode=hash_mode).schema("mins")
     )
     return mins.groupBy("band", "bucket").agg(F.min("min_id").alias("min_id"))
 
@@ -923,9 +1134,7 @@ def read_minhash_bucket_mins(
 def read_minhash_verdicts(spark: SparkSession, store_dir: str) -> DataFrame:
     """All admission verdicts accumulated so far (one row per doc)."""
     return _read_store_or_empty(
-        spark,
-        f"{store_dir}/verdicts",
-        "doc_id BIGINT, is_dup BOOLEAN, dup_of BIGINT, dup_jaccard DOUBLE, batch_id BIGINT",
+        spark, f"{store_dir}/verdicts", _minhash_family().schema("verdicts")
     )
 
 
@@ -1066,109 +1275,9 @@ def reconcile_minhash_admission(
     recomputes greedy verdicts for that batch, so the route DROPS the
     watermark when it writes such a batch — the next reconciliation
     re-detects from scratch and restores equality."""
-    from pyspark.storagelevel import StorageLevel
-
-    from csv_query_engine_spark.pipeline.dedup import _hashed_shingles, jaccard
-
-    bucket_sql_type = "STRING" if hash_mode == "md5" else "BIGINT"
-    mins = _read_store_or_empty(
-        spark,
-        f"{store_dir}/mins",
-        f"band INT, bucket {bucket_sql_type}, min_id BIGINT, batch_id BIGINT",
+    return _reconcile_bucket_min(
+        spark, store_dir, _minhash_family(shingle_k, hash_mode), threshold
     )
-    entries = _read_store_or_empty(
-        spark,
-        f"{store_dir}/entries",
-        f"doc_id BIGINT, band INT, bucket {bucket_sql_type}, batch_id BIGINT",
-    )
-    affected, newest = _stale_min_affected(spark, store_dir, mins, entries, "doc_id")
-    if affected is None:
-        return 0
-    try:
-        n_affected = affected.count()
-        if n_affected == 0:
-            _write_reconcile_watermark(spark, store_dir, int(newest))
-            return 0
-        finals = mins.groupBy("band", "bucket").agg(F.min("min_id").alias("cand"))
-        cand = (
-            entries.join(affected.select("doc_id"), "doc_id", "left_semi")
-            .join(finals, ["band", "bucket"])
-            .filter(F.col("doc_id") != F.col("cand"))
-            .select("doc_id", "cand")
-            .distinct()
-        )
-        docs_schema = "doc_id BIGINT, text STRING, batch_id BIGINT"
-        need_ids = (
-            affected.select("doc_id")
-            .unionByName(cand.select(F.col("cand").alias("doc_id")))
-            .distinct()
-        )
-        need_docs = (
-            _read_store_or_empty(spark, f"{store_dir}/docs", docs_schema)
-            .select("doc_id", "text")
-            .join(need_ids, "doc_id", "left_semi")
-        )
-        hashed = (
-            _hashed_shingles(need_docs, "doc_id", "text", shingle_k, hash_mode)
-            .select("id", "hashes")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        try:
-            verified = (
-                cand.withColumnRenamed("doc_id", "id")
-                .join(hashed.select("id", F.col("hashes").alias("h_a")), "id")
-                .join(
-                    hashed.select(F.col("id").alias("cand"), F.col("hashes").alias("h_b")),
-                    "cand",
-                )
-                .select("id", "cand", jaccard(F.col("h_a"), F.col("h_b")).alias("j"))
-                .filter(F.col("j") >= threshold)
-            )
-            dup = (
-                verified.groupBy("id")
-                .agg(F.min(F.struct(F.col("cand"), F.col("j"))).alias("m"))
-                .select(
-                    F.col("id").alias("doc_id"),
-                    F.col("m.cand").alias("_dup_of"),
-                    F.col("m.j").alias("_dup_j"),
-                )
-            )
-            new_rows = (
-                affected.join(dup, "doc_id", "left")
-                .select(
-                    "doc_id",
-                    F.col("_dup_of").isNotNull().alias("is_dup"),
-                    F.coalesce(F.col("_dup_of"), F.lit(-1)).cast("bigint").alias("dup_of"),
-                    F.coalesce(F.col("_dup_j"), F.lit(-1.0)).alias("dup_jaccard"),
-                    "batch_id",
-                )
-            )
-            verdicts_schema = (
-                "doc_id BIGINT, is_dup BOOLEAN, dup_of BIGINT, "
-                "dup_jaccard DOUBLE, batch_id BIGINT"
-            )
-            old = (
-                _read_store_or_empty(spark, f"{store_dir}/verdicts", verdicts_schema)
-                .join(affected.select("batch_id").distinct(), "batch_id", "left_semi")
-                .join(affected.select("doc_id"), "doc_id", "left_anti")
-                .select("doc_id", "is_dup", "dup_of", "dup_jaccard", "batch_id")
-            )
-            out = old.unionByName(new_rows).localCheckpoint(eager=True)
-            try:
-                (
-                    out.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch_id")
-                    .parquet(f"{store_dir}/verdicts")
-                )
-            finally:
-                out.unpersist()
-        finally:
-            hashed.unpersist()
-        _write_reconcile_watermark(spark, store_dir, int(newest))
-        return n_affected
-    finally:
-        affected.unpersist()
 
 
 def route_semantic_admission_batch(
@@ -1224,131 +1333,13 @@ def route_semantic_admission_batch(
     estimate screen needed — the bucket-MIN bound already caps
     candidates, and the round-13 scale probe measured the batch face
     wall-free at 2M vectors)."""
-    from pyspark.storagelevel import StorageLevel
-
-    from csv_query_engine_spark.pipeline import similarity as sim
-
-    spark = batch_df.sparkSession
-    mins_schema = "band INT, bucket INT, min_id BIGINT, batch_id BIGINT"
-    vecs_schema = "vec_id BIGINT, embedding ARRAY<FLOAT>, batch_id BIGINT"
-
-    buckets_udf = sim.quantized_band_buckets_udf(
-        sim._quantized_planes(n_planes, dim), n_bands
-    )
     batch = batch_df.select(
         F.col(id_col).cast("long").alias("vec_id"),
         F.col(vec_col).cast("array<float>").alias("embedding"),
     )
-    # the vector table feeds the bucket scan, the verify join (both
-    # sides' batch half) and the vecs-store write — persist once
-    v = batch.select(
-        "vec_id",
-        "embedding",
-        sim._quantized_norm(F.col("embedding")).alias("nq"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        be = v.select(
-            "vec_id", F.posexplode(buckets_udf(F.col("embedding"))).alias("band", "bucket")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        batch_mins = be.groupBy("band", "bucket").agg(F.min("vec_id").alias("min_id"))
-        prev_mins = (
-            _read_store_or_empty(spark, f"{store_dir}/mins", mins_schema)
-            .filter(F.col("batch_id") < int(batch_id))
-            .select("band", "bucket", "min_id")
-        )
-        merged = (
-            prev_mins.unionByName(batch_mins)
-            .groupBy("band", "bucket")
-            .agg(F.min("min_id").alias("min_id"))
-        )
-        cand = (
-            be.join(merged, ["band", "bucket"])
-            .filter(F.col("min_id") != F.col("vec_id"))
-            .select("vec_id", F.col("min_id").alias("cand"))
-            .distinct()
-        )
-        prev_vecs = (
-            _read_store_or_empty(spark, f"{store_dir}/vecs", vecs_schema)
-            .filter(F.col("batch_id") < int(batch_id))
-            .select("vec_id", "embedding")
-            .join(
-                F.broadcast(cand.select(F.col("cand").alias("vec_id")).distinct()),
-                "vec_id",
-                "left_semi",
-            )
-        )
-        cand_vecs = v.select("vec_id", "embedding", "nq").unionByName(
-            prev_vecs.select(
-                "vec_id",
-                "embedding",
-                sim._quantized_norm(F.col("embedding")).alias("nq"),
-            )
-        )
-        score = sim.quantized_cosine(
-            F.col("vec_a"), F.col("vec_b"), F.col("na"), F.col("nb")
-        )
-        scored = (
-            cand.join(
-                v.select(
-                    "vec_id", F.col("embedding").alias("vec_a"), F.col("nq").alias("na")
-                ),
-                "vec_id",
-            )
-            .join(
-                cand_vecs.select(
-                    F.col("vec_id").alias("cand"),
-                    F.col("embedding").alias("vec_b"),
-                    F.col("nq").alias("nb"),
-                ),
-                "cand",
-            )
-            .select("vec_id", "cand", score.alias("cos"))
-            .filter(F.col("cos") >= F.lit(float(threshold)))
-        )
-        dup = (
-            scored.groupBy("vec_id")
-            .agg(F.min(F.struct(F.col("cand"), F.col("cos"))).alias("m"))
-            .select(
-                "vec_id",
-                F.col("m.cand").alias("dup_of"),
-                F.col("m.cos").alias("dup_cosine"),
-            )
-        )
-        # spine = every batch vector (the batch operator's spine is the
-        # vector table itself — unlike shingles, every vector buckets)
-        verdicts = (
-            v.select("vec_id")
-            .join(dup, "vec_id", "left")
-            .select(
-                "vec_id",
-                F.col("dup_of").isNotNull().alias("is_dup"),
-                F.coalesce(F.col("dup_of"), F.lit(-1)).cast("bigint").alias("dup_of"),
-                F.coalesce(F.col("dup_cosine"), F.lit(-1.0)).alias("dup_cosine"),
-            )
-        )
-        entries = be.select("vec_id", "band", "bucket")
-        for side, sub in (
-            (batch, "vecs"),
-            (batch_mins, "mins"),
-            (entries, "entries"),
-            (verdicts, "verdicts"),
-        ):
-            (
-                side.withColumn("batch_id", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(f"{store_dir}/{sub}")
-            )
-        wm = _read_reconcile_watermark(spark, store_dir)
-        if wm is not None and int(batch_id) <= wm:
-            _drop_reconcile_watermark(spark, store_dir)
-    finally:
-        v.unpersist()
-        try:
-            be.unpersist()
-        except NameError:
-            pass
+    _route_bucket_min_batch(
+        batch, batch_id, store_dir, _semantic_family(n_planes, n_bands, dim), threshold
+    )
 
 
 def semantic_admission_stream(
@@ -1365,17 +1356,9 @@ def semantic_admission_stream(
     did for token space.  Checkpoint offsets + batch_id-keyed dynamic
     overwrite + the pre-batch read guard make it effectively-once
     under replay."""
-
-    def route(batch_df, batch_id):
-        route_semantic_admission_batch(
-            batch_df, batch_id, store_dir, threshold=threshold, **kwargs
-        )
-
-    return (
-        stream.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _run_batches(
+        stream, checkpoint, route_semantic_admission_batch,
+        store_dir=store_dir, threshold=threshold, **kwargs,
     )
 
 
@@ -1383,18 +1366,14 @@ def read_semantic_bucket_mins(spark: SparkSession, store_dir: str) -> DataFrame:
     """MIN-merge every batch's bucket-min partition into the current
     semantic-admission state (the MIN-mergeable contract shared with
     the minhash store; :func:`compact_batch_store` applies)."""
-    mins = _read_store_or_empty(
-        spark, f"{store_dir}/mins", "band INT, bucket INT, min_id BIGINT, batch_id BIGINT"
-    )
+    mins = _read_store_or_empty(spark, f"{store_dir}/mins", _semantic_family().schema("mins"))
     return mins.groupBy("band", "bucket").agg(F.min("min_id").alias("min_id"))
 
 
 def read_semantic_verdicts(spark: SparkSession, store_dir: str) -> DataFrame:
     """All semantic-admission verdicts accumulated so far."""
     return _read_store_or_empty(
-        spark,
-        f"{store_dir}/verdicts",
-        "vec_id BIGINT, is_dup BOOLEAN, dup_of BIGINT, dup_cosine DOUBLE, batch_id BIGINT",
+        spark, f"{store_dir}/verdicts", _semantic_family().schema("verdicts")
     )
 
 
@@ -1416,117 +1395,9 @@ def reconcile_semantic_admission(
     (``_reconciled_upto=``) and the route drops the watermark when a
     batch at/below it replays — identical protocol, identical crash
     story (per-batch delete-then-reinsert idempotence)."""
-    from pyspark.storagelevel import StorageLevel
-
-    from csv_query_engine_spark.pipeline import similarity as sim
-
-    mins = _read_store_or_empty(
-        spark, f"{store_dir}/mins", "band INT, bucket INT, min_id BIGINT, batch_id BIGINT"
+    return _reconcile_bucket_min(
+        spark, store_dir, _semantic_family(n_planes, n_bands, dim), threshold
     )
-    entries = _read_store_or_empty(
-        spark,
-        f"{store_dir}/entries",
-        "vec_id BIGINT, band INT, bucket INT, batch_id BIGINT",
-    )
-    affected, newest = _stale_min_affected(spark, store_dir, mins, entries, "vec_id")
-    if affected is None:
-        return 0
-    try:
-        n_affected = affected.count()
-        if n_affected == 0:
-            _write_reconcile_watermark(spark, store_dir, int(newest))
-            return 0
-        finals = mins.groupBy("band", "bucket").agg(F.min("min_id").alias("cand"))
-        cand = (
-            entries.join(affected.select("vec_id"), "vec_id", "left_semi")
-            .join(finals, ["band", "bucket"])
-            .filter(F.col("vec_id") != F.col("cand"))
-            .select("vec_id", "cand")
-            .distinct()
-        )
-        vecs_schema = "vec_id BIGINT, embedding ARRAY<FLOAT>, batch_id BIGINT"
-        need_ids = (
-            affected.select("vec_id")
-            .unionByName(cand.select(F.col("cand").alias("vec_id")))
-            .distinct()
-        )
-        need_vecs = (
-            _read_store_or_empty(spark, f"{store_dir}/vecs", vecs_schema)
-            .select("vec_id", "embedding")
-            .join(need_ids, "vec_id", "left_semi")
-            .select(
-                "vec_id",
-                "embedding",
-                sim._quantized_norm(F.col("embedding")).alias("nq"),
-            )
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        try:
-            score = sim.quantized_cosine(
-                F.col("vec_a"), F.col("vec_b"), F.col("na"), F.col("nb")
-            )
-            verified = (
-                cand.join(
-                    need_vecs.select(
-                        "vec_id",
-                        F.col("embedding").alias("vec_a"),
-                        F.col("nq").alias("na"),
-                    ),
-                    "vec_id",
-                )
-                .join(
-                    need_vecs.select(
-                        F.col("vec_id").alias("cand"),
-                        F.col("embedding").alias("vec_b"),
-                        F.col("nq").alias("nb"),
-                    ),
-                    "cand",
-                )
-                .select("vec_id", "cand", score.alias("cos"))
-                .filter(F.col("cos") >= F.lit(float(threshold)))
-            )
-            dup = (
-                verified.groupBy("vec_id")
-                .agg(F.min(F.struct(F.col("cand"), F.col("cos"))).alias("m"))
-                .select(
-                    "vec_id",
-                    F.col("m.cand").alias("_dup_of"),
-                    F.col("m.cos").alias("_dup_c"),
-                )
-            )
-            new_rows = affected.join(dup, "vec_id", "left").select(
-                "vec_id",
-                F.col("_dup_of").isNotNull().alias("is_dup"),
-                F.coalesce(F.col("_dup_of"), F.lit(-1)).cast("bigint").alias("dup_of"),
-                F.coalesce(F.col("_dup_c"), F.lit(-1.0)).alias("dup_cosine"),
-                "batch_id",
-            )
-            verdicts_schema = (
-                "vec_id BIGINT, is_dup BOOLEAN, dup_of BIGINT, "
-                "dup_cosine DOUBLE, batch_id BIGINT"
-            )
-            old = (
-                _read_store_or_empty(spark, f"{store_dir}/verdicts", verdicts_schema)
-                .join(affected.select("batch_id").distinct(), "batch_id", "left_semi")
-                .join(affected.select("vec_id"), "vec_id", "left_anti")
-                .select("vec_id", "is_dup", "dup_of", "dup_cosine", "batch_id")
-            )
-            out = old.unionByName(new_rows).localCheckpoint(eager=True)
-            try:
-                (
-                    out.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch_id")
-                    .parquet(f"{store_dir}/verdicts")
-                )
-            finally:
-                out.unpersist()
-        finally:
-            need_vecs.unpersist()
-        _write_reconcile_watermark(spark, store_dir, int(newest))
-        return n_affected
-    finally:
-        affected.unpersist()
 
 
 def compact_batch_store(
@@ -1569,22 +1440,9 @@ def compact_batch_store(
             "(two-phase-commit generation swap) for those"
         )
     store = _read_store_or_empty(spark, store_path, schema)
-    batches = sorted(r[0] for r in store.select("batch_id").distinct().collect())
+    batches, upto_batch = _compaction_bounds(store, upto_batch)
     if upto_batch is None:
-        if len(batches) < 2:
-            return 0
-        upto_batch = batches[-2]
-    elif batches and upto_batch >= batches[-1]:
-        # the NEWEST batch may still be an uncommitted foreachBatch: a
-        # replay would rewrite its batch_id partition with batch-only
-        # rows AFTER the older partitions were deleted — silent loss of
-        # merged MIN/MAX state.  Guard, don't clamp (the repo's
-        # guard-everything convention; round-13 ADVICE fix).
-        raise ValueError(
-            f"upto_batch={upto_batch} includes the newest stored batch "
-            f"({batches[-1]}), which a foreachBatch replay can still rewrite "
-            "— compact strictly below it (default: batches[-2])"
-        )
+        return 0
     todo = [b for b in batches if b <= upto_batch]
     if len(todo) < 2:
         return 0
@@ -1597,37 +1455,42 @@ def compact_batch_store(
         .localCheckpoint(eager=True)
     )
     try:
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(store_path)
-        )
+        _write_batch(merged, store_path)
     finally:
         merged.unpersist()
     # idempotent cleanup: each deletion is individually safe (survivors
-    # merge to the same values); decoded-name matching per the round-11
-    # partition-dir rule even though batch ids never escape
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(store_path)
-    fs = root.getFileSystem(hconf)
-    gone = {str(b) for b in todo if b != upto_batch}
-    removed = 0
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith("batch_id=")):
-            continue
-        if _unescape_path_name(name[len("batch_id="):]) in gone:
-            fs.delete(st.getPath(), True)
-            removed += 1
-    return removed
+    # merge to the same values)
+    return _delete_partitions(
+        spark, store_path, "batch_id", {str(b) for b in todo if b != upto_batch}
+    )
 
 
-def _store_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
+def _compaction_bounds(store: DataFrame, upto_batch: int | None, floor: int | None = None):
+    """(sorted stored batch ids, the batch to fold up to — None when
+    there is nothing to compact): the shared batch listing of both
+    compactions.  ``floor`` is the latest committed SUM generation
+    (already folded).  The default ``upto`` is the newest batch strictly
+    below the NEWEST stored one (and above ``floor``).  An explicit
+    ``upto_batch`` at or past the newest batch is REFUSED: the newest
+    batch may still be an uncommitted foreachBatch, and a replay would
+    rewrite its partition with batch-only rows AFTER the older
+    partitions were folded and deleted — silent loss of merged MIN/MAX
+    state, or a double count for SUM.  Guard, don't clamp (the repo's
+    guard-everything convention; round-13 ADVICE fix)."""
+    ids = sorted(r[0] for r in store.select("batch_id").distinct().collect())
+    newest = ids[-1] if ids else floor
+    if newest is None:
+        return ids, None
+    if upto_batch is None:
+        below = [b for b in ids if b < newest and (floor is None or b > floor)]
+        return ids, (below[-1] if below else None)
+    if upto_batch >= newest:
+        raise ValueError(
+            f"upto_batch={upto_batch} includes the newest stored batch "
+            f"({newest}), which a foreachBatch replay can still rewrite — "
+            "compact strictly below it"
+        )
+    return ids, (None if floor is not None and upto_batch <= floor else upto_batch)
 
 
 def _latest_committed_gen(spark: SparkSession, store_path: str) -> int | None:
@@ -1706,25 +1569,9 @@ def compact_sum_store(
     path keeps strictly above ``upto_batch`` — its rewrite lands in a
     raw partition the reader still consumes exactly once."""
     raw = _read_store_or_empty(spark, store_path, schema)
-    raw_ids = sorted(r[0] for r in raw.select("batch_id").distinct().collect())
     prev_gen = _latest_committed_gen(spark, store_path)
-    newest = max(raw_ids) if raw_ids else prev_gen
-    if newest is None:
-        return 0
+    raw_ids, upto_batch = _compaction_bounds(raw, upto_batch, floor=prev_gen)
     if upto_batch is None:
-        candidates = [b for b in raw_ids if b < newest]
-        if prev_gen is not None:
-            candidates = [b for b in candidates if b > prev_gen]
-        if not candidates:
-            return 0
-        upto_batch = candidates[-1]
-    if upto_batch >= newest:
-        raise ValueError(
-            f"upto_batch={upto_batch} includes the newest stored batch "
-            f"({newest}), which a foreachBatch replay can still rewrite — "
-            "compact strictly below it"
-        )
-    if prev_gen is not None and upto_batch <= prev_gen:
         return 0
     view = read_sum_store(spark, store_path, schema)
     merged = (
@@ -1735,18 +1582,12 @@ def compact_sum_store(
     )
     staged = f"{store_path}/_gen/{int(upto_batch)}"
     merged.write.mode("overwrite").parquet(f"{staged}/data")
-    fs, root, jvm = _store_fs(spark, store_path)
+    fs, _, jvm = _store_fs(spark, store_path)
     fs.create(jvm.org.apache.hadoop.fs.Path(f"{staged}/_COMMITTED"), True).close()
     # post-commit cleanup — every step idempotent and read-invisible
-    gone = {str(b) for b in raw_ids if b <= upto_batch}
-    removed = 0
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith("batch_id=")):
-            continue
-        if _unescape_path_name(name[len("batch_id="):]) in gone:
-            fs.delete(st.getPath(), True)
-            removed += 1
+    removed = _delete_partitions(
+        spark, store_path, "batch_id", {str(b) for b in raw_ids if b <= upto_batch}
+    )
     gen_root = jvm.org.apache.hadoop.fs.Path(f"{store_path}/_gen")
     for st in fs.listStatus(gen_root):
         name = st.getPath().getName()
@@ -1770,13 +1611,7 @@ def route_cm_batch(
     from csv_query_engine_spark.pipeline.sketches import cm_cells
 
     cells = cm_cells(batch_df.select(key_col), key_col, depth=depth, width=width)
-    (
-        cells.withColumn("batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(cells_path)
-    )
+    _write_batch(cells, cells_path, batch_id)
 
 
 def cm_sketch_stream(
@@ -1796,15 +1631,9 @@ def cm_sketch_stream(
     streaming_heavy_hitters (top-k only): the CM store is
     O(depth×width×batches) no matter the key cardinality, and
     compacting old batch partitions into one is the same SUM."""
-
-    def route(batch_df, batch_id):
-        route_cm_batch(batch_df, batch_id, key_col, cells_path, depth, width)
-
-    return (
-        stream.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _run_batches(
+        stream, checkpoint, route_cm_batch,
+        key_col=key_col, cells_path=cells_path, depth=depth, width=width,
     )
 
 
@@ -1843,13 +1672,7 @@ def route_hll_batch(
         group_col,
         p=p,
     )
-    (
-        regs.withColumn("batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(regs_path)
-    )
+    _write_batch(regs, regs_path, batch_id)
 
 
 def hll_sketch_stream(
@@ -1865,15 +1688,9 @@ def hll_sketch_stream(
     per group per batch) with NO per-key stream state; duplicates
     across batches cannot move any register, so the merged estimate
     equals the one-shot batch estimate exactly."""
-
-    def route(batch_df, batch_id):
-        route_hll_batch(batch_df, batch_id, key_col, group_col, regs_path, p)
-
-    return (
-        stream.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _run_batches(
+        stream, checkpoint, route_hll_batch,
+        key_col=key_col, group_col=group_col, regs_path=regs_path, p=p,
     )
 
 
@@ -1882,9 +1699,9 @@ def read_hll_registers(spark: SparkSession, regs_path: str, group_col: str) -> D
     (explicit schema — the zero-batch-directory lesson; the group
     column always reads back as STRING, :func:`route_hll_batch` casts
     it on write)."""
-    regs = spark.read.schema(
-        f"{group_col} STRING, b BIGINT, mb INT, batch_id BIGINT"
-    ).parquet(regs_path)
+    regs = _read_store_or_empty(
+        spark, regs_path, f"{group_col} STRING, b BIGINT, mb INT, batch_id BIGINT"
+    )
     return regs.groupBy(group_col, "b").agg(F.max("mb").alias("mb"))
 
 
@@ -1909,14 +1726,7 @@ def route_bm25_batch(
     from csv_query_engine_spark.pipeline.retrieval import doc_term_frequencies
 
     tf = doc_term_frequencies(batch_df, id_col=id_col, text_col=text_col)
-    (
-        tf.withColumn("id", F.col("id").cast("long"))
-        .withColumn("batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(postings_path)
-    )
+    _write_batch(tf.withColumn("id", F.col("id").cast("long")), postings_path, batch_id)
 
 
 def bm25_index_stream(
@@ -1934,15 +1744,9 @@ def bm25_index_stream(
     construction).  Checkpoint state is source offsets only — the
     index lives in the partitioned store, mergeable and compactable
     (concatenating batch partitions is the merge)."""
-
-    def route(batch_df, batch_id):
-        route_bm25_batch(batch_df, batch_id, postings_path, id_col, text_col)
-
-    return (
-        stream.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _run_batches(
+        stream, checkpoint, route_bm25_batch,
+        postings_path=postings_path, id_col=id_col, text_col=text_col,
     )
 
 
@@ -1952,8 +1756,8 @@ def read_bm25_postings(spark: SparkSession, postings_path: str) -> DataFrame:
     (an update), only its LATEST batch's postings count — per-id
     max-batch_id filter, one bounded join.  Explicit schema (the
     zero-batch-directory lesson)."""
-    p = spark.read.schema("id BIGINT, token STRING, tf BIGINT, batch_id BIGINT").parquet(
-        postings_path
+    p = _read_store_or_empty(
+        spark, postings_path, "id BIGINT, token STRING, tf BIGINT, batch_id BIGINT"
     )
     latest = p.groupBy("id").agg(F.max("batch_id").alias("batch_id"))
     return p.join(latest, ["id", "batch_id"]).select("id", "token", "tf")
@@ -1972,14 +1776,7 @@ def route_hdr_batch(
     idiom for order statistics."""
     from csv_query_engine_spark.pipeline.sketches import hdr_buckets
 
-    b = hdr_buckets(batch_df, value_col, sub_bits=sub_bits)
-    (
-        b.withColumn("batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(buckets_path)
-    )
+    _write_batch(hdr_buckets(batch_df, value_col, sub_bits=sub_bits), buckets_path, batch_id)
 
 
 def hdr_sketch_stream(
@@ -1993,15 +1790,9 @@ def hdr_sketch_stream(
     SUM-merged at read time — bounded state with NO per-key stream
     state; quantile estimates from the merged sketch equal the
     one-shot batch build exactly (deterministic integer buckets)."""
-
-    def route(batch_df, batch_id):
-        route_hdr_batch(batch_df, batch_id, value_col, buckets_path, sub_bits)
-
-    return (
-        stream.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _run_batches(
+        stream, checkpoint, route_hdr_batch,
+        value_col=value_col, buckets_path=buckets_path, sub_bits=sub_bits,
     )
 
 
@@ -2034,25 +1825,8 @@ def read_entity_store(
     must read only STRICTLY EARLIER partitions, or a replayed batch
     would see its own earlier write and mis-match against itself.
     A store that does not exist yet (the FIRST batch) reads as empty."""
-
-    def _read(path: str, schema: str) -> DataFrame:
-        from pyspark.errors import AnalysisException
-
-        try:
-            return spark.read.schema(schema).parquet(path)
-        except AnalysisException as e:
-            # ONLY the missing-path case reads as empty (the first
-            # batch).  Any other failure (corrupt footer, permissions,
-            # FS hiccup) must FAIL the batch so the checkpoint retries
-            # it — an empty-store fallback would durably write wrong
-            # matched_to=-1 verdicts that a replay then reproduces
-            # (round-9 review finding).
-            if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-                return spark.createDataFrame([], schema)
-            raise
-
-    recs = _read(f"{store_dir}/records", _ENTITY_RECORD_SCHEMA)
-    vars_ = _read(f"{store_dir}/variants", _ENTITY_VARIANT_SCHEMA)
+    recs = _read_store_or_empty(spark, f"{store_dir}/records", _ENTITY_RECORD_SCHEMA)
+    vars_ = _read_store_or_empty(spark, f"{store_dir}/variants", _ENTITY_VARIANT_SCHEMA)
     if before_batch is not None:
         recs = recs.filter(F.col("batch_id") < before_batch)
         vars_ = vars_.filter(F.col("batch_id") < before_batch)
@@ -2138,21 +1912,9 @@ def route_entity_admission_batch(
                 .cast("long")
                 .alias("matched_to"),
             )
-            .withColumn("batch_id", F.lit(int(batch_id)))
         )
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{store_dir}/records")
-        )
-        (
-            inc_vars.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{store_dir}/variants")
-        )
+        _write_batch(out, f"{store_dir}/records", batch_id)
+        _write_batch(inc_vars, f"{store_dir}/variants", batch_id)
     finally:
         batch.unpersist()
         inc_vars.unpersist()
@@ -2166,59 +1928,68 @@ def entity_admission_stream(
     verdict (:func:`route_entity_admission_batch`).  Checkpoint state
     is source offsets only; the store (records + precomputed name
     variants) lives in the batch_id-partitioned tables."""
-
-    def route(batch_df, batch_id):
-        route_entity_admission_batch(batch_df, batch_id, store_dir, **match_kwargs)
-
-    return (
-        stream.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _run_batches(
+        stream, checkpoint, route_entity_admission_batch, store_dir=store_dir, **match_kwargs
     )
 
 
 # ------------------------------------------------ streaming join-view IVM
 
-def _unescape_path_name(name: str) -> str:
-    """Decode Spark's partition-directory percent-escaping (the inverse
-    of ExternalCatalogUtils.escapePathName: ``%XX`` hex pairs for the
-    reserved/control characters, everything else literal)."""
-    out: list[str] = []
-    i = 0
-    while i < len(name):
-        c = name[i]
-        if c == "%" and i + 2 < len(name):
-            try:
-                out.append(chr(int(name[i + 1 : i + 3], 16)))
-                i += 3
-                continue
-            except ValueError:
-                pass
-        out.append(c)
-        i += 1
-    return "".join(out)
+def _rewrite_buckets(
+    spark: SparkSession, view_dir: str, touched_rows, rebuild, target_file_bytes: int | None
+) -> None:
+    """The bucket-rewrite tail shared by both join-view routes.
+    ``touched_rows`` are the collected (``_b``, ``_bs`` = its string
+    form) rows of the touched buckets; ``rebuild(touched)`` returns the
+    new contents of exactly those buckets.  The rewrite is a dynamic
+    partition overwrite on ``_b`` (optionally file-sized); buckets
+    whose every row disappeared are deleted explicitly — dynamic
+    overwrite cannot rewrite a partition it emits zero rows for."""
+    from pyspark.storagelevel import StorageLevel
 
-
-def _delete_emptied_buckets(spark: SparkSession, view_dir: str, emptied: set) -> None:
-    """Remove bucket directories whose every row disappeared (dynamic
-    overwrite cannot rewrite a partition it emits zero rows for).
-    Matching is on the percent-DECODED value part of listed ``_b=*``
-    directory names, so whatever escaping Spark applied when writing is
-    matched exactly (ADVICE round 10 — never f-string the raw value
-    into a path).  Idempotent: deleting an absent path is a no-op."""
-    if not emptied:
+    # NULL check FIRST: sorted() over a mixed None/non-None batch
+    # raises TypeError before the intended diagnostic (ADVICE round
+    # 11 — only the all-NULL single-row case reached the ValueError).
+    if any(r["_bs"] is None for r in touched_rows):
+        raise ValueError(
+            "join view: bucket expression produced NULL for some rows — "
+            "a NULL bucket writes __HIVE_DEFAULT_PARTITION__ and breaks "
+            "the emptied-bucket cleanup; make bucket_expr total over the "
+            "fact columns (COALESCE a sentinel)"
+        )
+    if not touched_rows:
         return
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(view_dir)
-    fs = root.getFileSystem(hconf)
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith("_b=")):
-            continue
-        if _unescape_path_name(name[3:]) in emptied:
-            fs.delete(st.getPath(), True)
+    out = rebuild(sorted(r["_b"] for r in touched_rows)).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        writer = out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        if target_file_bytes is not None:
+            # file-size hygiene per rewrite (round 11): derive
+            # maxRecordsPerFile from a bounded Arrow sample of the
+            # (already persisted) output — bounds oversized files
+            # with no extra shuffle; pair with compact_join_view
+            # for files-per-bucket hygiene on long streams.
+            from csv_query_engine_spark.io.writers import estimate_bytes_per_row
+
+            bpr = estimate_bytes_per_row(out)
+            writer = writer.option(
+                "maxRecordsPerFile", str(max(int(target_file_bytes / bpr), 1))
+            )
+        writer.partitionBy("_b").parquet(view_dir)
+        # Partition-DIRECTORY matching happens on the string form (Spark
+        # names dirs from the value's string repr, percent-escaping
+        # special characters) — never on f-string interpolation of the
+        # raw Python value (ADVICE round 10: a bucket_expr value with
+        # ':' or ' ' built a path that missed the real escaped dir and
+        # the "deleted" rows resurfaced on the next read).
+        written = {
+            r["_bs"]
+            for r in out.select(F.col("_b").cast("string").alias("_bs")).distinct().collect()
+        }
+        _delete_partitions(
+            spark, view_dir, "_b", {r["_bs"] for r in touched_rows} - written
+        )
+    finally:
+        out.unpersist()
 
 
 def route_join_view_batch(
@@ -2289,7 +2060,6 @@ def route_join_view_batch(
     the OLD bucket-determining values plus an insert with the new.
     The default hash-of-pk bucket satisfies this automatically (the pk
     is immutable by definition)."""
-    from pyspark.errors import AnalysisException
     from pyspark.storagelevel import StorageLevel
 
     spark = batch_df.sparkSession
@@ -2307,73 +2077,19 @@ def route_join_view_batch(
             .distinct()
             .collect()
         )
-        # NULL check FIRST: sorted() over a mixed None/non-None batch
-        # raises TypeError before the intended diagnostic (ADVICE round
-        # 11 — only the all-NULL single-row case reached the ValueError).
-        if any(r["_bs"] is None for r in touched_rows):
-            raise ValueError(
-                "join view: bucket expression produced NULL for some rows — "
-                "a NULL bucket writes __HIVE_DEFAULT_PARTITION__ and breaks "
-                "the emptied-bucket cleanup; make bucket_expr total over the "
-                "fact columns (COALESCE a sentinel)"
-            )
-        touched = sorted(r["_b"] for r in touched_rows)
-        # Partition-DIRECTORY matching happens on the string form (Spark
-        # names dirs from the value's string repr, percent-escaping
-        # special characters) — never on f-string interpolation of the
-        # raw Python value (ADVICE round 10: a bucket_expr value with
-        # ':' or ' ' built a path that missed the real escaped dir and
-        # the "deleted" rows resurfaced on the next read).
-        touched_strs = {r["_bs"] for r in touched_rows}
-        if not touched:
-            return
-        upserts = delta.filter(F.col(change_col) != "delete").drop(change_col)
-        fresh = upserts.join(dim, join_keys, "inner").withColumn("_b", bucket)
-        try:
-            view = spark.read.schema(fresh.schema).parquet(view_dir)
-        except AnalysisException as e:
-            # ONLY missing-path reads as empty (first batch); anything
-            # else fails the batch so the checkpoint retries (the
-            # entity-store rule).
-            if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-                view = fresh.limit(0)
-            else:
-                raise
-        keys = delta.select(*fact_pk).distinct()
-        kept = (
-            view.filter(F.col("_b").isin(list(touched)))
-            .join(F.broadcast(keys), fact_pk, "left_anti")
-        )
-        out = kept.unionByName(fresh.select(*kept.columns)).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        try:
-            writer = (
-                out.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-            )
-            if target_file_bytes is not None:
-                # file-size hygiene per rewrite (round 11): derive
-                # maxRecordsPerFile from a bounded Arrow sample of the
-                # (already persisted) output — bounds oversized files
-                # with no extra shuffle; pair with compact_join_view
-                # for files-per-bucket hygiene on long streams.
-                from csv_query_engine_spark.io.writers import estimate_bytes_per_row
 
-                bpr = estimate_bytes_per_row(out)
-                writer = writer.option(
-                    "maxRecordsPerFile", str(max(int(target_file_bytes / bpr), 1))
-                )
-            writer.partitionBy("_b").parquet(view_dir)
-            written = {
-                r["_bs"]
-                for r in out.select(F.col("_b").cast("string").alias("_bs"))
-                .distinct()
-                .collect()
-            }
-            _delete_emptied_buckets(spark, view_dir, touched_strs - written)
-        finally:
-            out.unpersist()
+        def rebuild(touched):
+            upserts = delta.filter(F.col(change_col) != "delete").drop(change_col)
+            fresh = upserts.join(dim, join_keys, "inner").withColumn("_b", bucket)
+            view = _read_store_or_empty(spark, view_dir, fresh.schema)
+            keys = delta.select(*fact_pk).distinct()
+            kept = (
+                view.filter(F.col("_b").isin(touched))
+                .join(F.broadcast(keys), fact_pk, "left_anti")
+            )
+            return kept.unionByName(fresh.select(*kept.columns))
+
+        _rewrite_buckets(spark, view_dir, touched_rows, rebuild, target_file_bytes)
     finally:
         delta.unpersist()
 
@@ -2422,11 +2138,7 @@ def join_view_stream(
                 max_files_per_bucket=max_files_per_bucket,
             )
 
-    return (
-        stream.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
+    return _run_batches(stream, checkpoint, route)
 
 
 def route_join_view_dim_batch(
@@ -2484,72 +2196,17 @@ def route_join_view_dim_batch(
             .distinct()
             .collect()
         )
-        if not touched_rows:
-            return
-        touched = [r["_b"] for r in touched_rows]
-        if any(r["_bs"] is None for r in touched_rows):
-            raise ValueError(
-                "join view: bucket expression produced NULL for some rows — "
-                "a NULL bucket writes __HIVE_DEFAULT_PARTITION__ and breaks "
-                "the emptied-bucket cleanup; make bucket_expr total over the "
-                "fact columns (COALESCE a sentinel)"
-            )
-        touched_strs = {r["_bs"] for r in touched_rows}
-        sub = view.filter(F.col("_b").isin(touched))
-        out = refresh_join_view_dim(
-            sub, delta, join_keys, update_cols, change_col
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            writer = (
-                out.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-            )
-            if target_file_bytes is not None:
-                # same per-rewrite sizing as the fact route
-                from csv_query_engine_spark.io.writers import estimate_bytes_per_row
-
-                bpr = estimate_bytes_per_row(out)
-                writer = writer.option(
-                    "maxRecordsPerFile", str(max(int(target_file_bytes / bpr), 1))
-                )
-            writer.partitionBy("_b").parquet(view_dir)
-            written = {
-                r["_bs"]
-                for r in out.select(F.col("_b").cast("string").alias("_bs"))
-                .distinct()
-                .collect()
-            }
-            _delete_emptied_buckets(spark, view_dir, touched_strs - written)
-        finally:
-            out.unpersist()
+        _rewrite_buckets(
+            spark,
+            view_dir,
+            touched_rows,
+            lambda touched: refresh_join_view_dim(
+                view.filter(F.col("_b").isin(touched)), delta, join_keys, update_cols, change_col
+            ),
+            target_file_bytes,
+        )
     finally:
         delta.unpersist()
-
-
-def join_view_dim_stream(
-    dim_stream: DataFrame,
-    view_dir: str,
-    join_keys: list[str],
-    update_cols: list[str],
-    schema: str,
-    checkpoint: str,
-):
-    """Continuous dim-side maintenance: every dim-delta micro-batch
-    routes through :func:`route_join_view_dim_batch`.  Run it and the
-    fact-side :func:`join_view_stream` with ``availableNow``/triggered
-    hand-offs (or a single orchestrating stream) so their batches never
-    interleave on the store — the serialization contract above."""
-
-    def route(batch_df, batch_id):
-        route_join_view_dim_batch(
-            batch_df, batch_id, view_dir, join_keys, update_cols, schema,
-        )
-
-    return (
-        dim_stream.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
 
 
 def read_join_view(spark: SparkSession, view_dir: str, schema: str) -> DataFrame:
@@ -2557,14 +2214,7 @@ def read_join_view(spark: SparkSession, view_dir: str, schema: str) -> DataFrame
     emptied-store lesson: a view whose every bucket was deleted has no
     files to infer from).  ``schema`` must include the ``_b INT``
     bucket column."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.schema(schema).parquet(view_dir)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return spark.createDataFrame([], schema)
-        raise
+    return _read_store_or_empty(spark, view_dir, schema)
 
 
 def join_view_file_census(spark: SparkSession, view_dir: str) -> dict[str, tuple[str, int]]:
@@ -2572,10 +2222,7 @@ def join_view_file_census(spark: SparkSession, view_dir: str) -> dict[str, tuple
     value -> (escaped directory name, file count).  Pure listing — no
     data read; the input to :func:`compact_join_view`'s hot-bucket
     selection and the test pin on bounded files-per-bucket."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(view_dir)
-    fs = root.getFileSystem(hconf)
+    fs, root, _ = _store_fs(spark, view_dir)
     if not fs.exists(root):
         return {}
     out: dict[str, tuple[str, int]] = {}
@@ -2676,14 +2323,7 @@ def route_census_batch(batch_df, batch_id: int, census_dir: str, cols=None):
     the identical census and rewrites its own partition)."""
     from csv_query_engine_spark.profiler import table_profile
 
-    prof = table_profile(batch_df, cols)
-    (
-        prof.withColumn("batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(census_dir)
-    )
+    _write_batch(table_profile(batch_df, cols), census_dir, batch_id)
 
 
 _CENTROID_SCHEMA = "label STRING, dim INT, sum_units BIGINT, n_vecs BIGINT, batch_id BIGINT"
@@ -2731,13 +2371,7 @@ def route_centroid_batch(
     state = dims.groupBy("label", "dim").agg(
         F.sum("_q").alias("sum_units"), F.count("_q").alias("n_vecs")
     )
-    (
-        state.withColumn("batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(store_dir)
-    )
+    _write_batch(state, store_dir, batch_id)
 
 
 def centroid_stream(
@@ -2750,15 +2384,9 @@ def centroid_stream(
     """Streaming per-label centroid maintenance via foreachBatch →
     :func:`route_centroid_batch`; effectively-once under replay (the
     idiom)."""
-
-    def route(batch_df, batch_id):
-        route_centroid_batch(batch_df, batch_id, store_dir, label_col, vec_col)
-
-    return (
-        stream.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _run_batches(
+        stream, checkpoint, route_centroid_batch,
+        store_dir=store_dir, label_col=label_col, vec_col=vec_col,
     )
 
 
@@ -2778,6 +2406,32 @@ def read_merged_centroids(spark: SparkSession, store_dir: str) -> DataFrame:
             (F.col("_su").cast("double") / F.lit(1e6) / F.col("_n")).alias("centroid"),
             F.col("_n").cast("long").alias("n_vecs"),
         )
+    )
+
+
+def _transition_sides(spark: SparkSession, store: DataFrame, last_n: int | None):
+    """The shared front of the drift readers: the stored batch ids are
+    collected ONCE (bounded — one row per micro-batch), trimmed to the
+    most recent ``last_n`` transitions, and turned into a broadcast
+    (from_batch, to_batch) pair table.  Returns the two sides of the
+    reader's lagged self-join — the store rows of each transition's
+    from- and to-batch, keyed by the pair (``batch_id`` dropped) — or
+    None when fewer than two batches are stored."""
+    ids = [
+        r["batch_id"]
+        for r in store.select("batch_id").distinct().orderBy("batch_id").collect()
+    ]
+    if last_n is not None and last_n >= 0:
+        ids = ids[-(last_n + 1):]
+    if len(ids) < 2:
+        return None
+    pairs = spark.createDataFrame(
+        [(int(a), int(b)) for a, b in zip(ids, ids[1:])],
+        "from_batch BIGINT, to_batch BIGINT",
+    )
+    return tuple(
+        store.join(F.broadcast(pairs), store["batch_id"] == pairs[c]).drop("batch_id")
+        for c in ("from_batch", "to_batch")
     )
 
 
@@ -2806,22 +2460,17 @@ def read_centroid_drift(
         "from_batch BIGINT, to_batch BIGINT, label STRING, l2_shift DOUBLE, "
         "cosine DOUBLE, n_vecs_old BIGINT, n_vecs_new BIGINT"
     )
-    p = _read_store_or_empty(spark, store_dir, _CENTROID_SCHEMA)
-    ids = [r["batch_id"] for r in p.select("batch_id").distinct().orderBy("batch_id").collect()]
-    if last_n is not None and last_n >= 0:
-        ids = ids[-(last_n + 1):]
-    if len(ids) < 2:
-        return spark.createDataFrame([], _EMPTY)
-    pairs = spark.createDataFrame(
-        [(int(a), int(b)) for a, b in zip(ids, ids[1:])],
-        "from_batch BIGINT, to_batch BIGINT",
+    sides = _transition_sides(
+        spark, _read_store_or_empty(spark, store_dir, _CENTROID_SCHEMA), last_n
     )
+    if sides is None:
+        return spark.createDataFrame([], _EMPTY)
     c = F.col("sum_units").cast("double") / F.lit(1e6) / F.col("n_vecs")
-    ca = p.join(F.broadcast(pairs), p["batch_id"] == pairs["from_batch"]).select(
+    ca = sides[0].select(
         "from_batch", "to_batch", "label", "dim",
         c.alias("_ca"), F.col("n_vecs").alias("_na"),
     )
-    cb = p.join(F.broadcast(pairs), p["batch_id"] == pairs["to_batch"]).select(
+    cb = sides[1].select(
         "from_batch", "to_batch", "label", "dim",
         c.alias("_cb"), F.col("n_vecs").alias("_nb"),
     )
@@ -2882,13 +2531,7 @@ def route_vocab_batch(
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    (
-        hist.withColumn("batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(store_dir)
-    )
+    _write_batch(hist, store_dir, batch_id)
 
 
 def vocab_stream(
@@ -2900,15 +2543,9 @@ def vocab_stream(
 ):
     """Streaming vocabulary-histogram maintenance via foreachBatch →
     :func:`route_vocab_batch`; effectively-once under replay."""
-
-    def route(batch_df, batch_id):
-        route_vocab_batch(batch_df, batch_id, store_dir, text_col, n_buckets)
-
-    return (
-        stream.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _run_batches(
+        stream, checkpoint, route_vocab_batch,
+        store_dir=store_dir, text_col=text_col, n_buckets=n_buckets,
     )
 
 
@@ -2937,22 +2574,13 @@ def read_vocab_drift(
         "from_batch BIGINT, to_batch BIGINT, js_divergence DOUBLE, "
         "tokens_old BIGINT, tokens_new BIGINT"
     )
-    p = _read_store_or_empty(spark, store_dir, _VOCAB_SCHEMA)
-    ids = [r["batch_id"] for r in p.select("batch_id").distinct().orderBy("batch_id").collect()]
-    if last_n is not None and last_n >= 0:
-        ids = ids[-(last_n + 1):]
-    if len(ids) < 2:
+    sides = _transition_sides(
+        spark, _read_store_or_empty(spark, store_dir, _VOCAB_SCHEMA), last_n
+    )
+    if sides is None:
         return spark.createDataFrame([], _EMPTY)
-    pairs = spark.createDataFrame(
-        [(int(a), int(b)) for a, b in zip(ids, ids[1:])],
-        "from_batch BIGINT, to_batch BIGINT",
-    )
-    ha = p.join(F.broadcast(pairs), p["batch_id"] == pairs["from_batch"]).select(
-        "from_batch", "to_batch", "bucket", F.col("n").alias("_na")
-    )
-    hb = p.join(F.broadcast(pairs), p["batch_id"] == pairs["to_batch"]).select(
-        "from_batch", "to_batch", "bucket", F.col("n").alias("_nb")
-    )
+    ha = sides[0].select("from_batch", "to_batch", "bucket", F.col("n").alias("_na"))
+    hb = sides[1].select("from_batch", "to_batch", "bucket", F.col("n").alias("_nb"))
     j = ha.join(hb, ["from_batch", "to_batch", "bucket"], "full_outer").select(
         "from_batch",
         "to_batch",
@@ -3015,61 +2643,13 @@ def route_contamination_batch(
     v = semantic_contamination(
         batch_df, bench, threshold=threshold, id_col=id_col, vec_col=vec_col
     )
-    (
-        v.withColumn("batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(verdict_dir)
-    )
-
-
-def contamination_stream(
-    stream: DataFrame, verdict_dir: str, bench: DataFrame, checkpoint: str,
-    threshold: float = 0.9, id_col: str = "vec_id", vec_col: str = "embedding",
-):
-    """Continuously-screened embedding stream: every micro-batch's
-    contamination verdicts land in the batch_id-keyed store; read the
-    accumulated verdicts back with :func:`read_contamination_verdicts`."""
-
-    def route(batch_df, batch_id):
-        route_contamination_batch(
-            batch_df, batch_id, verdict_dir, bench, threshold, id_col, vec_col
-        )
-
-    return (
-        stream.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
+    _write_batch(v, verdict_dir, batch_id)
 
 
 def read_contamination_verdicts(spark: SparkSession, verdict_dir: str) -> DataFrame:
     """The accumulated verdict store, explicit schema (the zero-batch
     directory lesson); only PATH_NOT_FOUND reads as empty."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.schema(_CONTAM_SCHEMA).parquet(verdict_dir)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return spark.createDataFrame([], _CONTAM_SCHEMA)
-        raise
-
-
-def census_stream(stream: DataFrame, census_dir: str, checkpoint: str, cols=None):
-    """Continuously-profiled stream: every micro-batch appends its
-    census snapshot; :func:`read_census_drift` turns the store into a
-    per-batch-transition drift timeline."""
-
-    def route(batch_df, batch_id):
-        route_census_batch(batch_df, batch_id, census_dir, cols)
-
-    return (
-        stream.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
+    return _read_store_or_empty(spark, verdict_dir, _CONTAM_SCHEMA)
 
 
 def read_census_drift(
@@ -3088,8 +2668,6 @@ def read_census_drift(
     by a broadcast pair table keying census_drift's full-outer column
     join); pass ``last_n`` to bound a long-running stream's timeline
     to its most recent N transitions (dashboards rarely want more)."""
-    from pyspark.errors import AnalysisException
-
     from csv_query_engine_spark.profiler import census_drift
 
     _EMPTY = (
@@ -3097,33 +2675,9 @@ def read_census_drift(
         "type_old STRING, type_new STRING, null_ppm_old BIGINT, "
         "null_ppm_new BIGINT, ndv_old BIGINT, ndv_new BIGINT"
     )
-    try:
-        p = spark.read.schema(_CENSUS_SCHEMA).parquet(census_dir)
-    except AnalysisException as e:
-        # only a store that does not exist yet reads as empty (the
-        # entity-store rule); other failures must surface
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return spark.createDataFrame([], _EMPTY)
-        raise
-    ids = [
-        r["batch_id"]
-        for r in p.select("batch_id").distinct().orderBy("batch_id").collect()
-    ]  # bounded: one row per micro-batch
-    if last_n is not None and last_n >= 0:
-        ids = ids[-(last_n + 1):]
-    if len(ids) < 2:
+    sides = _transition_sides(
+        spark, _read_store_or_empty(spark, census_dir, _CENSUS_SCHEMA), last_n
+    )
+    if sides is None:
         return spark.createDataFrame([], _EMPTY)
-    # one lagged self-join over ALL transitions (round-13 — replaces
-    # the per-transition union loop): the broadcast pair table keys
-    # census_drift's full-outer column join per (from_batch, to_batch)
-    pairs = spark.createDataFrame(
-        [(int(a), int(b)) for a, b in zip(ids, ids[1:])],
-        "from_batch BIGINT, to_batch BIGINT",
-    )
-    old = p.join(F.broadcast(pairs), p["batch_id"] == pairs["from_batch"]).drop(
-        "batch_id"
-    )
-    new = p.join(F.broadcast(pairs), p["batch_id"] == pairs["to_batch"]).drop(
-        "batch_id"
-    )
-    return census_drift(old, new, key_cols=["from_batch", "to_batch"])
+    return census_drift(*sides, key_cols=["from_batch", "to_batch"])
