@@ -27,6 +27,8 @@ from __future__ import annotations
 
 import re
 
+from csv_query_engine_spark.nlsql.generator import quote_identifier
+
 # DuckDB name -> Spark name, only where signature AND semantics align.
 FUNCTION_RENAMES = {
     "list_contains": "array_contains",
@@ -107,7 +109,7 @@ def duckdb_to_spark_sql(sql: str) -> str:
                     break
                 ident.append(sql[j])
                 j += 1
-            out.append("`" + "".join(ident).replace("`", "``") + "`")
+            out.append(quote_identifier("".join(ident)))
             i = j + 1
         elif sql.startswith("--", i):
             _flush()

@@ -23,14 +23,13 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from csv_query_engine_spark.profiler import qcol
+
 
 def collapse_duplicates(df: DataFrame, count_col: str = "count") -> DataFrame:
     """Group by all columns, count, sort desc (A17 + A19)."""
-    return (
-        df.groupBy(*df.columns)
-        .agg(F.count(F.lit(1)).alias(count_col))
-        .orderBy(F.desc(count_col), *df.columns)
-    )
+    cols = [qcol(c) for c in df.columns]
+    return df.groupBy(*cols).agg(F.count(F.lit(1)).alias(count_col)).orderBy(F.desc(count_col), *cols)
 
 
 def _scala_iter(iterable):
@@ -61,10 +60,11 @@ def _collapse_probe(df: DataFrame, count_col: str = "count") -> tuple[DataFrame,
     # GROUP BY ... COUNT(*) AS count query) and the probe filter must not
     # be ambiguous. Renamed to the public name only on the collapse path.
     tmp = "__collapse_n"
-    grouped = df.groupBy(*df.columns).agg(F.count(F.lit(1)).alias(tmp)).persist()
+    cols = [qcol(c) for c in df.columns]
+    grouped = df.groupBy(*cols).agg(F.count(F.lit(1)).alias(tmp)).persist()
     has_dup = grouped.filter(F.col(tmp) > 1).limit(1).count() > 0
     if has_dup:
-        out = grouped.orderBy(F.desc(tmp), *df.columns).withColumnRenamed(tmp, count_col)
+        out = grouped.orderBy(F.desc(tmp), *cols).withColumnRenamed(tmp, count_col)
         return out, True, grouped
     grouped.unpersist()
     return df, False, None

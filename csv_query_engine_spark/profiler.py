@@ -19,16 +19,21 @@ Two verified reference bugs are intentionally FIXED here (SURVEY.md §1):
   column, making 'other' unreachable (csv_profiler.py:24-31); same fix.
 
 Scale: typing comes from Spark's schema (free); the date probe runs on a
-driver-side sample of ``sample_rows`` rows, never a full scan.
+driver-side sample of ``sample_rows`` rows, never a full scan.  A sample
+value that does not start with a digit fails without a parse
+(:func:`_is_date_column`).
 """
 
 from __future__ import annotations
 
 from dataclasses import asdict, dataclass
+from datetime import datetime
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from csv_query_engine_spark.nlsql.generator import quote_identifier
 
 # Keyword lists are the reference's spec verbatim (csv_profiler.py:9-21).
 CITY_KEYWORDS = ("city", "location", "place", "town", "state", "country", "region", "area")
@@ -39,7 +44,8 @@ DATE_PARSE_THRESHOLD = 0.9
 DEFAULT_SAMPLE_ROWS = 1000
 
 # Formats the probe attempts, mirroring what pandas' "mixed" inference
-# accepted in practice for the reference's inputs.
+# accepted in practice for the reference's inputs: Spark patterns for
+# to_timestamp_any, the same formats as strptime patterns for the probe.
 _PROBE_FORMATS = (
     "yyyy-MM-dd'T'HH:mm:ss",
     "yyyy-MM-dd HH:mm:ss",
@@ -48,6 +54,7 @@ _PROBE_FORMATS = (
     "MM/dd/yyyy",
     "dd-MM-yyyy",
 )
+_PY_FORMATS = ("%Y-%m-%dT%H:%M:%S", "%Y-%m-%d %H:%M:%S", "%Y-%m-%d", "%Y/%m/%d", "%m/%d/%Y", "%d-%m-%Y")
 
 
 @dataclass(frozen=True)
@@ -70,43 +77,39 @@ def _base_type(dt: T.DataType) -> str:
     return "string"
 
 
-def _parse_rate(values: list) -> float:
-    """Fraction of non-null sample values that parse as a date/timestamp.
+def _parses_as_date(s: str) -> bool:
+    """Whether ``s`` parses under one of the probe formats."""
+    for fmt in _PY_FORMATS:
+        try:
+            datetime.strptime(s, fmt)
+            return True
+        except ValueError:
+            continue
+    return False
 
-    Driver-side over an already-collected sample — cheaper and simpler
-    than launching a Spark job per column, and the sample is bounded.
+
+def _is_date_column(values: list) -> bool:
+    """Whether at least ``DATE_PARSE_THRESHOLD`` of the non-blank sample
+    values parse as a date/timestamp.
+
+    Driver-side over an already-collected sample.  Every format opens
+    with ``%Y``, ``%m`` or ``%d``, whose regexes need a leading ``\\d``
+    (or a space, which ``strip()`` removed), so a value whose first
+    character is not a decimal digit fails without a parse.
     """
-    import datetime as dt
-
-    non_null = [v for v in values if v is not None and str(v).strip() != ""]
-    if not non_null:
-        return 0.0
-    ok = 0
-    py_formats = (
-        "%Y-%m-%dT%H:%M:%S",
-        "%Y-%m-%d %H:%M:%S",
-        "%Y-%m-%d",
-        "%Y/%m/%d",
-        "%m/%d/%Y",
-        "%d-%m-%Y",
-    )
-    for v in non_null:
-        s = str(v).strip()
-        for fmt in py_formats:
-            try:
-                dt.datetime.strptime(s, fmt)
-                ok += 1
-                break
-            except ValueError:
-                continue
-    return ok / len(non_null)
+    stripped = [s for s in (str(v).strip() for v in values if v is not None) if s]
+    ok = sum(1 for s in stripped if s[0].isdecimal() and _parses_as_date(s))
+    return bool(stripped) and ok / len(stripped) >= DATE_PARSE_THRESHOLD
 
 
 def detect_semantic_type(name: str, sample: list | None = None, parsed_as_date: bool = False) -> str:
     """Name-keyword semantic typing (A3). Precedence mirrors the
     reference (csv_profiler.py:4-31): city > service > date-by-name >
     date-by-content > other — with the content probe fixed to require a
-    real parse-rate instead of always succeeding."""
+    real parse-rate instead of always succeeding.  ``profile`` passes the
+    answer as ``parsed_as_date`` and no sample; a ``sample`` is probed by
+    :func:`_is_date_column`, which parses no value that does not start
+    with a digit."""
     lower = name.lower()
     if any(k in lower for k in CITY_KEYWORDS):
         return "city"
@@ -116,7 +119,7 @@ def detect_semantic_type(name: str, sample: list | None = None, parsed_as_date: 
         return "date"
     if parsed_as_date:
         return "date"
-    if sample is not None and _parse_rate(sample) >= DATE_PARSE_THRESHOLD:
+    if sample is not None and _is_date_column(sample):
         return "date"
     return "other"
 
@@ -128,25 +131,15 @@ def profile(df: DataFrame, sample_rows: int = DEFAULT_SAMPLE_ROWS) -> list[Colum
     numeric/timestamp columns are typed from the schema alone.
     """
     string_cols = [f.name for f in df.schema.fields if _base_type(f.dataType) == "string"]
-    samples: dict[str, list] = {c: [] for c in string_cols}
-    if string_cols:
-        rows = df.select(*[F.col(c) for c in string_cols]).limit(sample_rows).collect()
-        for row in rows:
-            for c in string_cols:
-                samples[c].append(row[c])
+    rows = df.select(*[qcol(c) for c in string_cols]).limit(sample_rows).collect() if string_cols else []
+    samples = {c: [row[i] for row in rows] for i, c in enumerate(string_cols)}
 
     out: list[ColumnInfo] = []
     for field in df.schema.fields:
-        base = _base_type(field.dataType)
-        if base == "string":
-            rate = _parse_rate(samples[field.name])
-            parsed_as_date = rate >= DATE_PARSE_THRESHOLD
-            col_type = "date" if parsed_as_date else "string"
-            semantic = detect_semantic_type(field.name, samples[field.name], parsed_as_date)
-        else:
-            col_type = base
-            semantic = detect_semantic_type(field.name, None, base == "date")
-        out.append(ColumnInfo(field.name, col_type, semantic))
+        col_type = _base_type(field.dataType)
+        if col_type == "string" and _is_date_column(samples[field.name]):
+            col_type = "date"
+        out.append(ColumnInfo(field.name, col_type, detect_semantic_type(field.name, None, col_type == "date")))
     return out
 
 
@@ -176,7 +169,7 @@ def low_cardinality_values(
     if not cols:
         return {}
     approx = df.agg(
-        *[F.approx_count_distinct(F.col(c)).alias(f"_a_{i}") for i, c in enumerate(cols)]
+        *[F.approx_count_distinct(qcol(c)).alias(f"_a_{i}") for i, c in enumerate(cols)]
     ).collect()[0]
     keep = [c for i, c in enumerate(cols) if approx[f"_a_{i}"] <= 2 * max_distinct]
     if not keep:
@@ -184,7 +177,7 @@ def low_cardinality_values(
     row = df.agg(
         *[
             F.slice(
-                F.sort_array(F.collect_set(F.col(c))), 1, max_distinct + 1
+                F.sort_array(F.collect_set(qcol(c))), 1, max_distinct + 1
             ).alias(f"_v_{i}")
             for i, c in enumerate(keep)
         ]
@@ -204,11 +197,12 @@ def to_timestamp_any(col: F.Column) -> F.Column:
     return F.coalesce(*exprs)
 
 
-def _qcol(name: str) -> F.Column:
+def qcol(name: str) -> F.Column:
     """Column reference by LITERAL name — backtick-quoted so headers
     containing dots, spaces, or backticks (CSV ingests) resolve as one
-    column instead of parsing as struct access (ADVICE round 10)."""
-    return F.col("`" + name.replace("`", "``") + "`")
+    column instead of parsing as struct access (ADVICE round 10).  Also
+    the all-columns references of ``postprocess``."""
+    return F.col(quote_identifier(name))
 
 
 def table_profile(
@@ -252,27 +246,27 @@ def table_profile(
     # Internal aliases are POSITIONAL (`_nn_{i}`), never f-string-built
     # from the column name: a name with a dot/space/backtick would break
     # F.col resolution of the alias (ADVICE round 10).  Input refs go
-    # through _qcol for the same reason.
+    # through qcol for the same reason.
     aggs, is_num = [], {}
     for i, c in enumerate(cols):
         dt = df.schema[c].dataType
         is_num[c] = type(dt) in numeric or isinstance(dt, T.DecimalType)
-        aggs.append(F.count(_qcol(c)).cast("bigint").alias(f"_nn_{i}"))
+        aggs.append(F.count(qcol(c)).cast("bigint").alias(f"_nn_{i}"))
         if not exact_distinct:
             aggs.append(
-                F.approx_count_distinct(_qcol(c)).cast("bigint").alias(f"_nd_{i}")
+                F.approx_count_distinct(qcol(c)).cast("bigint").alias(f"_nd_{i}")
             )
         if is_num[c]:
-            aggs.append(F.min(_qcol(c)).cast("double").alias(f"_mn_{i}"))
-            aggs.append(F.max(_qcol(c)).cast("double").alias(f"_mx_{i}"))
+            aggs.append(F.min(qcol(c)).cast("double").alias(f"_mn_{i}"))
+            aggs.append(F.max(qcol(c)).cast("double").alias(f"_mx_{i}"))
         else:
-            aggs.append(F.min(_qcol(c).cast("string")).alias(f"_mn_{i}"))
-            aggs.append(F.max(_qcol(c).cast("string")).alias(f"_mx_{i}"))
+            aggs.append(F.min(qcol(c).cast("string")).alias(f"_mn_{i}"))
+            aggs.append(F.max(qcol(c).cast("string")).alias(f"_mx_{i}"))
     one = df.agg(F.count(F.lit(1)).cast("bigint").alias("_n"), *aggs)
     if exact_distinct:
         nd = df.agg(
             *[
-                F.count_distinct(_qcol(c)).cast("bigint").alias(f"_nd_{i}")
+                F.count_distinct(qcol(c)).cast("bigint").alias(f"_nd_{i}")
                 for i, c in enumerate(cols)
             ]
         )
@@ -408,25 +402,25 @@ def table_profile_by(
         T.ByteType, T.ShortType, T.IntegerType, T.LongType,
         T.FloatType, T.DoubleType, T.DecimalType,
     }
-    # Positional internal aliases + _qcol input refs (same dotted-name
+    # Positional internal aliases + qcol input refs (same dotted-name
     # rule as table_profile); group keys get safe `_g{j}` aliases so the
     # exact-distinct join and the final select also survive odd headers.
     aggs, is_num = [], {}
     for i, c in enumerate(cols):
         dt = df.schema[c].dataType
         is_num[c] = type(dt) in numeric or isinstance(dt, T.DecimalType)
-        aggs.append(F.count(_qcol(c)).cast("bigint").alias(f"_nn_{i}"))
+        aggs.append(F.count(qcol(c)).cast("bigint").alias(f"_nn_{i}"))
         if not exact_distinct:
             aggs.append(
-                F.approx_count_distinct(_qcol(c)).cast("bigint").alias(f"_nd_{i}")
+                F.approx_count_distinct(qcol(c)).cast("bigint").alias(f"_nd_{i}")
             )
         if is_num[c]:
-            aggs.append(F.min(_qcol(c)).cast("double").alias(f"_mn_{i}"))
-            aggs.append(F.max(_qcol(c)).cast("double").alias(f"_mx_{i}"))
+            aggs.append(F.min(qcol(c)).cast("double").alias(f"_mn_{i}"))
+            aggs.append(F.max(qcol(c)).cast("double").alias(f"_mx_{i}"))
         else:
-            aggs.append(F.min(_qcol(c).cast("string")).alias(f"_mn_{i}"))
-            aggs.append(F.max(_qcol(c).cast("string")).alias(f"_mx_{i}"))
-    gkeys = [_qcol(g).alias(f"_g{j}") for j, g in enumerate(group_cols)]
+            aggs.append(F.min(qcol(c).cast("string")).alias(f"_mn_{i}"))
+            aggs.append(F.max(qcol(c).cast("string")).alias(f"_mx_{i}"))
+    gkeys = [qcol(g).alias(f"_g{j}") for j, g in enumerate(group_cols)]
     gnames = [f"_g{j}" for j in range(len(group_cols))]
     one = df.groupBy(*gkeys).agg(
         F.count(F.lit(1)).cast("bigint").alias("_n"), *aggs
@@ -434,7 +428,7 @@ def table_profile_by(
     if exact_distinct:
         nd = df.groupBy(*gkeys).agg(
             *[
-                F.count_distinct(_qcol(c)).cast("bigint").alias(f"_nd_{i}")
+                F.count_distinct(qcol(c)).cast("bigint").alias(f"_nd_{i}")
                 for i, c in enumerate(cols)
             ]
         )

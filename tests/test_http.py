@@ -107,6 +107,45 @@ def test_failed_reupload_keeps_loaded_table(spark):
     assert {r["City"]: r["count"] for r in q.get_json()["rows"]} == {"Mumbai": 23, "Delhi": 4}
 
 
+def test_odd_headers_upload_query_and_value_sets(spark):
+    """Headers with a dot, a space and a backtick are literal column
+    names everywhere: the upload profiles them, a `SELECT *` answer runs
+    the all-columns duplicate collapse over them, and the value-set scan
+    reads the dotted column (an unquoted ref parses `user.city` as a
+    struct field)."""
+    from csv_query_engine_spark.profiler import low_cardinality_values
+
+    engine = QueryEngine(spark, now=NOW)
+    app = create_app(engine)
+    app.config["TESTING"] = True
+    c = app.test_client()
+    data = b"user.city,sev level,e`f\n" + b"".join(
+        [b"Mumbai,3,01/05/2024\n"] * 2 + [b"Mumbai,2,01/06/2024\n", b"Delhi,1,01/07/2024\n", b"Pune,2,01/08/2024\n"]
+    )
+    up = c.post(
+        "/upload",
+        data={"file": (io.BytesIO(data), "odd.csv")},
+        content_type="multipart/form-data",
+    )
+    assert up.status_code == 200, up.get_json()
+    assert up.get_json()["columns"] == [
+        {"name": "user.city", "type": "string", "semantic_type": "city"},
+        {"name": "sev level", "type": "numeric", "semantic_type": "other"},
+        {"name": "e`f", "type": "date", "semantic_type": "date"},
+    ]
+    q = c.post("/query", json={"question": "incidents in Mumbai", "use_ai": False})
+    assert q.status_code == 200, q.get_json()
+    body = q.get_json()
+    assert body["sql"].startswith("SELECT * FROM df")
+    assert body["collapsed"] is True
+    assert body["rows"] == [
+        {"user.city": "Mumbai", "sev level": 3, "e`f": "01/05/2024", "count": 2},
+        {"user.city": "Mumbai", "sev level": 2, "e`f": "01/06/2024", "count": 1},
+    ]
+    vals = low_cardinality_values(spark.table("df"))
+    assert vals["user.city"] == ["Delhi", "Mumbai", "Pune"]
+
+
 def test_empty_question_is_400(client):
     r = client.post("/query", json={"question": "   "})
     assert r.status_code == 400

@@ -1,7 +1,12 @@
 from __future__ import annotations
 
+import datetime as dt
+
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from csv_query_engine_spark import profiler
 from csv_query_engine_spark.profiler import (
     ColumnInfo,
     detect_semantic_type,
@@ -156,3 +161,99 @@ def test_table_profile_odd_column_names(spark):
     # approx mode resolves the same refs
     approx = {r["column_name"] for r in table_profile(df, exact_distinct=False).collect()}
     assert approx == {"a.b", "c d", "e`f", "grp.key"}
+
+
+def _parse_rate_oracle(values: list) -> float:
+    """The full-rate probe the digit-skip decision replaced, verbatim:
+    the oracle the decision must agree with."""
+    import datetime as dt
+
+    non_null = [v for v in values if v is not None and str(v).strip() != ""]
+    if not non_null:
+        return 0.0
+    ok = 0
+    py_formats = (
+        "%Y-%m-%dT%H:%M:%S",
+        "%Y-%m-%d %H:%M:%S",
+        "%Y-%m-%d",
+        "%Y/%m/%d",
+        "%m/%d/%Y",
+        "%d-%m-%Y",
+    )
+    for v in non_null:
+        s = str(v).strip()
+        for fmt in py_formats:
+            try:
+                dt.datetime.strptime(s, fmt)
+                ok += 1
+                break
+            except ValueError:
+                continue
+    return ok / len(non_null)
+
+
+_IN_FORMATS = ("%Y-%m-%dT%H:%M:%S", "%Y-%m-%d %H:%M:%S", "%Y-%m-%d", "%Y/%m/%d", "%m/%d/%Y", "%d-%m-%Y")
+_OUT_FORMATS = ("%d.%m.%Y", "%Y%m%d", "%b %d %Y", "%H:%M", "%m/%d/%y", "%Y-%m-%dT%H:%M:%SZ", "%d %B %Y")
+# Arabic-Indic, Devanagari and fullwidth digits: all match the regex \d
+_DIGIT_SETS = ("٠١٢٣٤٥٦٧٨٩", "०१२३४५६७८९", "０１２３４５６７８９")
+
+
+def _unicode_lead(s: str, digits: str, k: int) -> str:
+    """``s`` with the digits of its first ``k`` characters swapped for
+    another script's: a Unicode year still parses (%Y is \\d\\d\\d\\d),
+    a Unicode month or day does not."""
+    return s[:k].translate(str.maketrans("0123456789", digits)) + s[k:]
+
+
+_stamps = st.datetimes(min_value=dt.datetime(1, 1, 1), max_value=dt.datetime(9999, 12, 31))
+_rendered = st.builds(lambda d, f: d.strftime(f), _stamps, st.sampled_from(_IN_FORMATS + _OUT_FORMATS))
+_date_values = st.one_of(
+    _rendered,
+    st.builds(
+        _unicode_lead,
+        st.builds(lambda d, f: d.strftime(f), _stamps, st.sampled_from(_IN_FORMATS)),
+        st.sampled_from(_DIGIT_SETS),
+        st.sampled_from([1, 4, 10]),
+    ),
+    st.sampled_from(["2024-02-30", "2024-13-01", "2023-02-29", "00/10/2024", "31-04-2024", "2024/00/10"]),
+    st.builds(lambda pad, v, end: pad + v + end, st.sampled_from(["", " ", "\t", "\n "]), _rendered, st.sampled_from(["", "  ", "\r\n"])),
+    st.none(),
+    st.sampled_from(["", " ", "\t"]),
+    st.integers(-(10**9), 10**9),
+    st.text(alphabet="0123456789-/: T.abcxyz", max_size=20),
+    st.text(max_size=12),
+)
+
+
+@st.composite
+def _near_threshold(draw):
+    """Dates mixed with non-dates at a share just under or over the 10%
+    the threshold allows, plus blanks the rate ignores."""
+    n = draw(st.integers(1, 300))
+    bad = min(n, max(0, n // 10 + draw(st.integers(-1, 2))))
+    dates = st.sampled_from(["2024-01-05", "01/05/2024", "2024/01/05", " 2024-01-05 09:00:00", "٢٠٢٤-01-05"])
+    junk = st.sampled_from(["n/a", "12 apples", "2024-13-01", "٢٠٢٤-٠١-٠١x", "1"])
+    values = [draw(dates) for _ in range(n - bad)] + [draw(junk) for _ in range(bad)]
+    values += draw(st.lists(st.sampled_from([None, "", "  "]), max_size=5))
+    return draw(st.permutations(values))
+
+
+@given(st.one_of(st.lists(_date_values, max_size=40), _near_threshold()))
+@settings(max_examples=1500, deadline=None)
+def test_date_decision_equals_full_rate_rule(values):
+    """The digit-skip decision answers exactly `rate >= threshold` of
+    the full-rate probe it replaced."""
+    want = _parse_rate_oracle(values) >= profiler.DATE_PARSE_THRESHOLD
+    assert profiler._is_date_column(values) == want
+
+
+def test_date_decision_parse_cost(monkeypatch):
+    """Values that do not start with a digit are never parsed; each
+    digit-led value is parsed once."""
+    calls = []
+    parse = profiler._parses_as_date
+    monkeypatch.setattr(profiler, "_parses_as_date", lambda s: calls.append(s) or parse(s))
+    assert not profiler._is_date_column([f"city {i}" for i in range(1000)])
+    assert calls == []
+    assert profiler._is_date_column(["2024-01-05"] * 950 + ["n/a"] * 50)
+    assert len(calls) == 950
