@@ -3,7 +3,7 @@
 The reference's only sinks are JSON rows to the HTTP client
 (query.py:63) and a client-side CSV export with quote-escaping
 (index.html:400-430, A25). Server-side we provide the real distributed
-writers; ``rows_json`` mirrors the ``List[Dict]`` envelope.
+writers.
 """
 
 from __future__ import annotations
@@ -27,15 +27,6 @@ def write_csv(df: DataFrame, path: str, mode: str = "overwrite", header: bool = 
 
 def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).json(path)
-
-
-def rows_json(df: DataFrame, limit: int | None = 200) -> list[dict]:
-    """Bounded row materialization (reference A20: ``to_dict('records')``,
-    query.py:56-63). Always bounded — an unbounded collect is a driver
-    OOM at scale, so ``limit=None`` must be requested explicitly."""
-    if limit is not None:
-        df = df.limit(limit)
-    return [row.asDict(recursive=True) for row in df.collect()]
 
 
 def write_orc(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:

@@ -41,13 +41,20 @@ def cache_scope(spark: SparkSession) -> Iterator[None]:
     signature tables, cluster token/gram tables, simhash signatures) and
     document that CACHE LIFETIME IS CALLER-OWNED — the blocks otherwise
     live until GC, clearCache, or eviction. Wrapping calls in this scope
-    releases, on exit, every cached table AND persistent RDD (the
-    localCheckpoint blocks of the iterative operators — which
-    ``spark.catalog.clearCache()`` alone does NOT touch) that was
-    created inside the scope, leaving anything persisted before it
-    untouched. Measured: letting these accumulate across an 89-query
-    run inflated the suite ~33% through memory/GC churn (BASELINE.md
-    round 4).
+    releases, on exit, the blocks of every persistent RDD created inside
+    the scope (cached tables and the localCheckpoint blocks of the
+    iterative operators — which ``spark.catalog.clearCache()`` alone
+    does NOT touch), leaving anything persisted before it untouched.
+    Measured: letting these accumulate across an 89-query run inflated
+    the suite ~33% through memory/GC churn (BASELINE.md round 4).
+
+    The SQL-cache ENTRIES of tables cached inside the scope stay
+    registered.  A later call that builds the same plan finds the stale
+    entry, so its ``persist()`` is a no-op and it recomputes through the
+    first call's lineage instead of re-caching.  Dropping the entries on
+    exit is not a free fix: repeat PageRank and tf-idf calls that
+    re-cached measured slower (local[4], sf0.01: 2.74–3.47 s vs
+    0.99–2.15 s and 0.77–0.97 s vs 0.39–0.78 s per call).
 
         with cache_scope(spark):
             pairs = minhash_lsh_pairs(docs).collect()

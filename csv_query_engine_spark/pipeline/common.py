@@ -56,21 +56,16 @@ def spread(df: DataFrame, bytes_per_partition: int | None = None) -> DataFrame:
     return df.repartition(want)
 
 
-# Eager cache pins (round 14/15). A just-persisted multi-consumer table
-# whose consumers materialize as INDEPENDENT leaf jobs (AQE broadcast
-# futures, concurrent exchange materializations) races its own cold
-# cache — each leg re-runs the upstream pipeline (measured on the media
-# dup-pair operators, round 14). pin() materializes the cache with one
-# count() job first. The switch exists ONLY so probes can A/B the pin
-# cost in one session (the count is semantically inert either way);
-# shipped behavior is always eager.
-EAGER_PINS = True
-
-
 def pin(df: DataFrame) -> DataFrame:
     """Materialize a just-persisted DataFrame's cache (one count job)
     before dependent branches fan out as independent leaf jobs. Returns
-    the input for chaining. See EAGER_PINS above."""
-    if EAGER_PINS:
-        df.count()
+    the input for chaining.
+
+    Eager cache pins (round 14/15): a just-persisted multi-consumer
+    table whose consumers materialize as INDEPENDENT leaf jobs (AQE
+    broadcast futures, concurrent exchange materializations) races its
+    own cold cache — each leg re-runs the upstream pipeline (measured on
+    the media dup-pair operators, round 14).  Whether a site keeps its
+    pin is decided per site, by a parent/change A/B of that site."""
+    df.count()
     return df

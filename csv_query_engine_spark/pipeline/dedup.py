@@ -32,13 +32,6 @@ from csv_query_engine_spark.pipeline.text import fingerprint, normalize_text, to
 # --------------------------------------------------------------- exact
 
 
-def exact_dedup(df: DataFrame, keys: list[str] | None = None) -> DataFrame:
-    """Keep one arbitrary row per key set (Spark's dropDuplicates).
-    Non-deterministic winner — use :func:`exact_dedup_canonical` when
-    the survivor must be stable."""
-    return df.dropDuplicates(keys)
-
-
 def exact_dedup_canonical(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Deterministic exact dedup on the normalized-text fingerprint:
     survivor = min id per fingerprint; also reports the collapsed
@@ -310,17 +303,6 @@ def _band_entries(
             )
         ).alias("be"),
     ).select("id", F.col("be.band").alias("band"), F.col("be.bucket").alias("bucket"))
-
-
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 64,
-    shingle_k: int = 5,
-) -> DataFrame:
-    """(id, sig) minhash signatures — see :func:`minhash_with_grams`."""
-    return minhash_with_grams(df, id_col, text_col, num_hashes, shingle_k).select("id", "sig")
 
 
 def minhash_lsh_pairs(

@@ -7,9 +7,16 @@
   The correctness baseline; O(Q×N) scoring but embarrassingly parallel
   and shuffle-free until the final per-query top-k.
 * :func:`lsh_bucket_topk` — the scale path: random-hyperplane signatures
-  (deterministic seeds), candidates restricted to matching buckets with
-  multi-probe (Hamming ≤ 1 bucket neighbors), exact rescoring inside the
-  bucket. Sub-linear candidate volume at 100 TB; approximate recall.
+  over scale-6 integer planes (deterministic seeds), candidates
+  restricted to matching buckets with multi-probe (Hamming ≤ 1 bucket
+  neighbors), integer-cosine rescoring inside the bucket. Sub-linear
+  candidate volume at 100 TB; approximate recall.
+
+The banded embedding-LSH operators (:func:`lsh_bucket_topk`,
+:func:`embedding_near_dup_pairs`, :func:`semantic_contamination_banded`,
+:func:`semantic_dedup_survivors`) have ONE form: scale-6 integer planes
+(:func:`_quantized_planes` / :func:`quantized_band_buckets_udf`) and
+:func:`quantized_cosine`, the arithmetic their DuckDB twins replay.
 """
 
 from __future__ import annotations
@@ -227,51 +234,6 @@ def _hyperplanes(n_planes: int, dim: int) -> list[list[float]]:
     return planes
 
 
-def signature_column(vec: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane signature as an int bucket id (bit b = sign of
-    dot(vec, plane_b)). Pure built-ins: literal plane arrays + zip_with.
-
-    Kept as the dependency-free reference; the hot paths use
-    :func:`signature_udf` — this form builds n_planes×dim literal nodes
-    (hundreds of py4j calls per plan) and folds interpreted per element.
-    """
-    sig = F.lit(0).cast("long")
-    for b, plane in enumerate(planes):
-        plane_col = F.array(*[F.lit(float(x)) for x in plane])
-        bit = F.when(dot(vec, plane_col) >= 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        sig = sig + (bit * F.lit(1 << b).cast("long"))
-    return sig
-
-
-def signature_udf(planes: list[list[float]]):
-    """Arrow-batched signature computation: one numpy matmul per batch
-    against the plane matrix shipped in the closure (same justification
-    as IVF's :func:`_probe_udf`: the literal-array formulation is
-    expensive to even CONSTRUCT, and evaluates interpreted). Sign
-    convention matches :func:`signature_column` (>= 0 -> bit set); a
-    dot product within float rounding of zero could differ between the
-    two implementations, so a deployment must pick one consistently —
-    all in-repo operators use this one."""
-    import numpy as np
-
-    mat = np.asarray(planes, dtype=np.float64).T  # dim × n_planes
-    weights = (1 << np.arange(mat.shape[1], dtype=np.uint64)).astype(np.uint64)
-
-    @F.pandas_udf(T.LongType())
-    def sig(col):
-        import numpy as _np
-        import pandas as _pd
-
-        if len(col) == 0:
-            return _pd.Series([], dtype="int64")
-        m = _np.stack([_np.asarray(v, dtype=_np.float64) for v in col])
-        bits = (m @ mat) >= 0.0
-        out = (bits.astype(_np.uint64) * weights).sum(axis=1).astype(_np.int64)
-        return _pd.Series(out)
-
-    return sig
-
-
 def _quantized_planes(n_planes: int, dim: int, scale: int = 6) -> list[list[int]]:
     """Scale-``scale`` fixed-point INTEGER hyperplanes: each float
     component of :func:`_hyperplanes` quantized with the pure-IEEE
@@ -402,64 +364,41 @@ def lsh_bucket_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     multiprobe_hamming: int = 1,
-    quantized: bool = False,
 ) -> DataFrame:
     """Approximate top-k: exact cosine rescoring restricted to candidates
     whose hyperplane signature is within ``multiprobe_hamming`` bits of
     the query's signature (multi-probe raises recall without touching
     more than (1 + n_planes) buckets per query).
 
-    ``quantized=True`` (round 13 — the `quantized_topk` graduation
-    precedent applied to LSH): signatures come from the scale-6 integer
-    planes (:func:`quantized_band_buckets_udf` with ONE band — the
-    packed signature IS a single band bucket), so every sign decision
-    is exact int64 arithmetic, and the rescore is
-    :func:`quantized_cosine` — the whole candidates→rescore→rank
-    pipeline then replays in DuckDB (:func:`sql_lsh_topk`), recall
-    trade included.  Float mode stays the production default."""
-    if quantized:
-        buckets_udf = quantized_band_buckets_udf(
-            _quantized_planes(n_planes, dim), n_bands=1
-        )
+    Signatures come from the scale-6 integer planes
+    (:func:`quantized_band_buckets_udf` with ONE band — the packed
+    signature IS a single band bucket), so every sign decision is exact
+    int64 arithmetic, and the rescore is :func:`quantized_cosine` — the
+    whole candidates→rescore→rank pipeline replays in DuckDB
+    (:func:`sql_lsh_topk`), recall trade included."""
+    buckets_udf = quantized_band_buckets_udf(_quantized_planes(n_planes, dim), n_bands=1)
 
-        def sig(col):
-            return F.element_at(buckets_udf(col), 1)
+    def sig(col):
+        return F.element_at(buckets_udf(col), 1)
 
-        c = _spread_v(embeddings).select(
-            F.col(id_col).alias("cand_id"),
-            F.col(vec_col).alias("c_vec"),
-            sig(F.col(vec_col)).alias("c_sig"),
-            _quantized_norm(F.col(vec_col)).alias("c_nq"),
-        )
-        q = queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
-            sig(F.col(vec_col)).alias("q_sig"),
-            _quantized_norm(F.col(vec_col)).alias("q_nq"),
-        )
-        score = quantized_cosine(
-            F.col("q_vec"), F.col("c_vec"), F.col("q_nq"), F.col("c_nq")
-        )
-    else:
-        planes = _hyperplanes(n_planes, dim)
-        sigf = signature_udf(planes)
-        c = _spread_v(embeddings).select(
-            F.col(id_col).alias("cand_id"),
-            F.col(vec_col).alias("c_vec"),
-            sigf(F.col(vec_col)).alias("c_sig"),
-        )
-        q = queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
-            sigf(F.col(vec_col)).alias("q_sig"),
-        )
-        score = cosine(F.col("q_vec"), F.col("c_vec"))
+    c = _spread_v(embeddings).select(
+        F.col(id_col).alias("cand_id"),
+        F.col(vec_col).alias("c_vec"),
+        sig(F.col(vec_col)).alias("c_sig"),
+        _quantized_norm(F.col(vec_col)).alias("c_nq"),
+    )
+    q = queries.select(
+        F.col(query_id_col).alias("query_id"),
+        F.col(vec_col).alias("q_vec"),
+        sig(F.col(vec_col)).alias("q_sig"),
+        _quantized_norm(F.col(vec_col)).alias("q_nq"),
+    )
+    score = quantized_cosine(F.col("q_vec"), F.col("c_vec"), F.col("q_nq"), F.col("c_nq"))
     # probe buckets: the query signature and its Hamming-1 neighbors
     probes = [F.col("q_sig")]
     if multiprobe_hamming >= 1:
         probes += [F.col("q_sig").bitwiseXOR(F.lit(1 << b)) for b in range(n_planes)]
-    q_cols = ["query_id", "q_vec"] + (["q_nq"] if quantized else [])
-    q_probed = q.select(*q_cols, F.explode(F.array(*probes)).alias("probe_sig"))
+    q_probed = q.select("query_id", "q_vec", "q_nq", F.explode(F.array(*probes)).alias("probe_sig"))
 
     scored = (
         c.join(F.broadcast(q_probed), (F.col("c_sig") == F.col("probe_sig")) & (F.col("cand_id") != F.col("query_id")))
@@ -483,9 +422,9 @@ def sql_lsh_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> str:
-    """DuckDB twin of :func:`lsh_bucket_topk` with ``quantized=True``
-    and Hamming-1 multi-probe — built on the shared quantized-LSH CTE
-    builders (the drift rule): the packed ``n_planes``-bit signature is
+    """DuckDB twin of :func:`lsh_bucket_topk` with Hamming-1 multi-probe
+    — built on the shared quantized-LSH CTE builders (the drift rule):
+    the packed ``n_planes``-bit signature is
     one band of :func:`_sql_band_buckets` (band_bits = n_planes), probe
     buckets are the signature plus its ``n_planes`` single-bit XOR
     flips, candidates dedupe across probes, the rescore is the
@@ -557,19 +496,16 @@ def embedding_near_dup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_bucket: int = 4096,
-    quantized: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: BANDED hyperplane-signature
     blocking (SimHash-style — a pair is a candidate if ANY band of the
     signature matches exactly), then exact cosine verification, so every
     emitted pair is a true positive.
 
-    ``quantized=True`` (round 13): band buckets come from the scale-6
-    integer planes (:func:`quantized_band_buckets_udf`) and the verify
-    cosine is :func:`quantized_cosine`, so the whole
-    banding → cap → pair → verify pipeline replays in DuckDB
-    (:func:`sql_embedding_near_dup_pairs`) — the same graduation the
-    banded contamination screen got in round 12.
+    Band buckets come from the scale-6 integer planes
+    (:func:`quantized_band_buckets_udf`) and the verify cosine is
+    :func:`quantized_cosine`, so the whole banding → cap → pair → verify
+    pipeline replays in DuckDB (:func:`sql_embedding_near_dup_pairs`).
 
     Scale design (vs the earlier single-12-bit-bucket form, which capped
     the bucket space at 4096 and collect_list'ed (id, VECTOR) structs —
@@ -595,51 +531,30 @@ def embedding_near_dup_pairs(
       task; cost is recall inside the dropped bucket only, and legit
       buckets at a sane tuning sit orders of magnitude below the cap.
     """
-    band_bits = n_planes // n_bands
-    planes = _hyperplanes(n_planes, dim)
     # Materialize the shared vector table ONCE (same discipline as
-    # minhash_lsh_pairs, dedup.py:312-315): `vecs` feeds the signature
-    # UDF scan AND both exact-verification joins (3 consumers) — without
-    # the persist the embeddings scan + _spread re-run per consumer and
-    # the pandas-UDF signature subtree is re-planned under the candidate
-    # joins (this was the slowest, highest-variance suite entry:
-    # 3.3→15.5→2.6 s across runs at sf0.1). `sigs` has one consumer
-    # (the band explode) so it is deliberately NOT persisted.
+    # minhash_lsh_pairs): `vecs` feeds the bucket UDF scan AND both
+    # exact-verification joins (3 consumers) — without the persist the
+    # embeddings scan + _spread re-run per consumer and the pandas-UDF
+    # bucket subtree is re-planned under the candidate joins (this was
+    # the slowest, highest-variance suite entry: 3.3→15.5→2.6 s across
+    # runs at sf0.1). `bands` has one consumer (the bucket aggregate) so
+    # it is deliberately NOT persisted.
     # MEMORY_AND_DISK: one row per vector, linear in corpus, spillable.
     # CACHE LIFETIME IS CALLER-OWNED — wrap in pipeline.cache_scope.
     from pyspark.storagelevel import StorageLevel
 
-    vec_cols = [F.col(id_col).alias("id"), F.col(vec_col).alias("vec")]
-    if quantized:
-        vec_cols.append(_quantized_norm(F.col(vec_col)).alias("nq"))
     vecs = (
         _spread_v(embeddings)
-        .select(*vec_cols)
+        .select(
+            F.col(id_col).alias("id"),
+            F.col(vec_col).alias("vec"),
+            _quantized_norm(F.col(vec_col)).alias("nq"),
+        )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     _pin(vecs)  # pin before the band/verify branches fan out (cache-race rule)
-    if quantized:
-        buckets_udf = quantized_band_buckets_udf(
-            _quantized_planes(n_planes, dim), n_bands
-        )
-        bands = vecs.select(
-            "id", F.posexplode(buckets_udf(F.col("vec"))).alias("band", "bucket")
-        )
-    else:
-        sigs = vecs.select("id", signature_udf(planes)(F.col("vec")).alias("sig"))
-        mask = (1 << band_bits) - 1
-        bands = sigs.select(
-            "id",
-            F.explode(
-                F.array(*[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned("sig", b * band_bits).bitwiseAND(F.lit(mask)).alias("bucket"),
-                    )
-                    for b in range(n_bands)
-                ])
-            ).alias("be"),
-        ).select("id", F.col("be.band").alias("band"), F.col("be.bucket").alias("bucket"))
+    buckets_udf = quantized_band_buckets_udf(_quantized_planes(n_planes, dim), n_bands)
+    bands = vecs.select("id", F.posexplode(buckets_udf(F.col("vec"))).alias("band", "bucket"))
 
     # One shuffle does pair-dedup AND verify-stage spreading: an explicit
     # hash repartition on the pair key satisfies dropDuplicates'
@@ -660,18 +575,9 @@ def embedding_near_dup_pairs(
         .repartition(p, "id_a", "id_b")
         .dropDuplicates()
     )
-    if quantized:
-        a = vecs.select(
-            F.col("id").alias("id_a"), F.col("vec").alias("vec_a"), F.col("nq").alias("na")
-        )
-        b = vecs.select(
-            F.col("id").alias("id_b"), F.col("vec").alias("vec_b"), F.col("nq").alias("nb")
-        )
-        score = quantized_cosine(F.col("vec_a"), F.col("vec_b"), F.col("na"), F.col("nb"))
-    else:
-        a = vecs.select(F.col("id").alias("id_a"), F.col("vec").alias("vec_a"))
-        b = vecs.select(F.col("id").alias("id_b"), F.col("vec").alias("vec_b"))
-        score = cosine(F.col("vec_a"), F.col("vec_b"))
+    a = vecs.select(F.col("id").alias("id_a"), F.col("vec").alias("vec_a"), F.col("nq").alias("na"))
+    b = vecs.select(F.col("id").alias("id_b"), F.col("vec").alias("vec_b"), F.col("nq").alias("nb"))
+    score = quantized_cosine(F.col("vec_a"), F.col("vec_b"), F.col("na"), F.col("nb"))
     return (
         cand.join(a, "id_a")
         .join(b, "id_b")
@@ -690,9 +596,9 @@ def sql_embedding_near_dup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> str:
-    """DuckDB twin of :func:`embedding_near_dup_pairs` with
-    ``quantized=True`` — the shared quantized-LSH CTE builders replay
-    banding (band_bits-wide buckets), the 2..max_bucket bucket window,
+    """DuckDB twin of :func:`embedding_near_dup_pairs` — the shared
+    quantized-LSH CTE builders replay banding (band_bits-wide buckets),
+    the 2..max_bucket bucket window,
     upper-triangle in-bucket pairs deduped across bands, and the
     integer-cosine FLOOR verify with the threshold as a
     CAST-double literal."""
@@ -752,9 +658,7 @@ def semantic_contamination_banded(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     bench_id_col: str = "vec_id",
-    rounding: int = 4,
     max_bucket: int = 4096,
-    quantized: bool = False,
 ) -> DataFrame:
     """The CORPUS-SIZED-bench decontamination path the exact screen's
     ``max_bench`` guard points at: banded hyperplane-signature blocking
@@ -777,64 +681,38 @@ def semantic_contamination_banded(
     the no-silent-caps accounting is the per-side bucket censuses any
     caller can re-run with the same band keys).
 
-    ``quantized=True`` makes the WHOLE pipeline reproducible (round-11
-    verdict #3, the `embedding_contamination_banded` oracle upgrade):
-    plane components and vector coordinates quantize to scale-6
-    integers (:func:`_quantized_planes`, the kmeans precedent), so
-    every sign decision is exact int64 arithmetic, band keys match a
-    DuckDB twin bit-for-bit, and the verify cosine is the
-    semantic-dedup integer form FLOOR(dotq/√(na·nb)·1e6+0.5)/1e6 —
-    :func:`sql_contamination_banded` emits the identical computation.
-    Float mode (default) keeps the cheaper float32 signature matmul
-    for production; the two modes differ only where a plane dot sits
-    within quantization distance of zero.
+    The WHOLE pipeline is reproducible: plane components and vector
+    coordinates quantize to scale-6 integers (:func:`_quantized_planes`,
+    the kmeans precedent), so every sign decision is exact int64
+    arithmetic, band keys match a DuckDB twin bit-for-bit, and the
+    verify cosine is the semantic-dedup integer form
+    FLOOR(dotq/√(na·nb)·1e6+0.5)/1e6 — :func:`sql_contamination_banded`
+    emits the identical computation.
 
-    Both vector tables persist (each feeds its signature scan AND the
+    Both vector tables persist (each feeds its bucket scan AND the
     exact-verify join).  Cache lifetime is CALLER-OWNED — wrap the call
     in ``pipeline.cache_scope(spark)`` to release the blocks on exit
     (the library-wide convention; long-lived sessions and foreachBatch
     reuse leak otherwise — round-11 verdict nit)."""
     from pyspark.storagelevel import StorageLevel
 
-    band_bits = n_planes // n_bands
-    mask = (1 << band_bits) - 1
-    planes = _hyperplanes(n_planes, dim)
-    buckets_udf = (
-        quantized_band_buckets_udf(_quantized_planes(n_planes, dim), n_bands)
-        if quantized
-        else None
-    )
+    buckets_udf = quantized_band_buckets_udf(_quantized_planes(n_planes, dim), n_bands)
 
     def _side(df, idc, out):
-        cols = [F.col(idc).alias(out), F.col(vec_col).alias(f"vec_{out}")]
-        if quantized:
-            cols.append(_quantized_norm(F.col(vec_col)).alias(f"nq_{out}"))
-        v = _spread_v(df).select(*cols).persist(StorageLevel.MEMORY_AND_DISK)
-        if quantized:
-            b = v.select(
-                out, F.posexplode(buckets_udf(F.col(f"vec_{out}"))).alias("band", "bucket")
+        v = (
+            _spread_v(df)
+            .select(
+                F.col(idc).alias(out),
+                F.col(vec_col).alias(f"vec_{out}"),
+                _quantized_norm(F.col(vec_col)).alias(f"nq_{out}"),
             )
-        else:
-            s = v.select(out, signature_udf(planes)(F.col(f"vec_{out}")).alias("sig"))
-            b = s.select(
-                out,
-                F.explode(
-                    F.array(*[
-                        F.struct(
-                            F.lit(k).alias("band"),
-                            F.shiftrightunsigned("sig", k * band_bits)
-                            .bitwiseAND(F.lit(mask))
-                            .alias("bucket"),
-                        )
-                        for k in range(n_bands)
-                    ])
-                ).alias("be"),
-            ).select(out, F.col("be.band").alias("band"), F.col("be.bucket").alias("bucket"))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        b = v.select(out, F.posexplode(buckets_udf(F.col(f"vec_{out}"))).alias("band", "bucket"))
         # the band table feeds TWO consumers (the degenerate-bucket
         # aggregate and the semi-join's probe side) — persist it or the
-        # signature stage (quantized mode: the Arrow-batched bucket UDF)
-        # pays a second full pass over this side (round-14, the
-        # semantic-survivors alignment)
+        # Arrow-batched bucket UDF pays a second full pass over this side
+        # (round-14, the semantic-survivors alignment)
         b = b.persist(StorageLevel.MEMORY_AND_DISK)
         # drop degenerate buckets on this side (bounded aggregate state)
         ok = (
@@ -854,12 +732,7 @@ def semantic_contamination_banded(
         .repartition(p, "cid", "bid")
         .dropDuplicates()
     )
-    if quantized:
-        score = quantized_cosine(
-            F.col("vec_cid"), F.col("vec_bid"), F.col("nq_cid"), F.col("nq_bid")
-        )
-    else:
-        score = _floor_quantize(cosine(F.col("vec_cid"), F.col("vec_bid")), rounding)
+    score = quantized_cosine(F.col("vec_cid"), F.col("vec_bid"), F.col("nq_cid"), F.col("nq_bid"))
     hits = (
         cand.join(vc, "cid")
         .join(vb, "bid")
@@ -888,9 +761,9 @@ def sql_contamination_banded(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> str:
-    """DuckDB twin of :func:`semantic_contamination_banded` with
-    ``quantized=True`` — replays the ENTIRE pipeline in exact integer
-    arithmetic: the scale-6 plane literals (:func:`_quantized_planes`,
+    """DuckDB twin of :func:`semantic_contamination_banded` — replays
+    the ENTIRE pipeline in exact integer arithmetic: the scale-6 plane
+    literals (:func:`_quantized_planes`,
     emitted as VALUES rows), per-(id, plane) sign bits from integer
     dots, per-band little-endian bucket packing, the per-SIDE
     ``max_bucket`` cap, the cross-set bucket join, and the
@@ -1285,7 +1158,6 @@ def ivf_topk(
     k: int = 5,
     n_centroids: int = 32,
     nprobe: int = 4,
-    refine: bool = True,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
@@ -1305,7 +1177,7 @@ def ivf_topk(
     centroids) where hyperplane LSH is data-oblivious.
     """
     seeds = _centroid_seeds(embeddings, n_centroids, id_col, vec_col)
-    cents = _refine_centroids(_spread_v(embeddings), seeds, id_col, vec_col) if refine else seeds
+    cents = _refine_centroids(_spread_v(embeddings), seeds, id_col, vec_col)
 
     assign = _probe_udf(cents, 1)
     multi = _probe_udf(cents, nprobe)

@@ -77,19 +77,9 @@ def stopword_hits_t(toks: Column, stopwords: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
 
 
-def stopword_hits(col: Column, stopwords: tuple[str, ...]) -> Column:
-    """Text-column convenience form of :func:`stopword_hits_t` (single
-    use only — hot paths materialize the tokens first)."""
-    return stopword_hits_t(tokens(col), stopwords)
-
-
 def stopword_ratio_t(toks: Column, stopwords: tuple[str, ...] = STOPWORDS_EN) -> Column:
     n = F.size(toks)
     return F.when(n > 0, stopword_hits_t(toks, stopwords).cast("double") / n.cast("double")).otherwise(F.lit(0.0))
-
-
-def stopword_ratio(col: Column, stopwords: tuple[str, ...] = STOPWORDS_EN) -> Column:
-    return stopword_ratio_t(tokens(col), stopwords)
 
 
 def mean_token_len_t(toks: Column) -> Column:
@@ -98,14 +88,13 @@ def mean_token_len_t(toks: Column) -> Column:
     return F.when(n > 0, total.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
 
 
-def mean_token_len(col: Column) -> Column:
-    return mean_token_len_t(tokens(col))
-
-
 def quality_score_t(col: Column, toks: Column) -> Column:
-    """Composite quality from the raw text column (punctuation) plus a
-    materialized token array (everything else) — see
-    :func:`quality_score` for semantics."""
+    """Composite document quality in [0,1] from the raw text column
+    (punctuation) plus a materialized token array (everything else):
+    favors texts with a sane length, low punctuation noise, some
+    stopwords (fluent prose), and plausible mean word length.
+    Deterministic double arithmetic only — mirrored exactly by the SQL
+    oracle."""
     n_tok = F.size(toks).cast("double")
     len_score = F.least(n_tok / F.lit(100.0), F.lit(1.0))
     punct_score = F.lit(1.0) - F.least(punct_ratio(col) * F.lit(4.0), F.lit(1.0))
@@ -113,14 +102,6 @@ def quality_score_t(col: Column, toks: Column) -> Column:
     mtl = mean_token_len_t(toks)
     wordlen_score = F.when((mtl >= 3.0) & (mtl <= 10.0), F.lit(1.0)).otherwise(F.lit(0.5))
     return (len_score * F.lit(0.3) + punct_score * F.lit(0.3) + sw_score * F.lit(0.2) + wordlen_score * F.lit(0.2))
-
-
-def quality_score(col: Column) -> Column:
-    """Composite document quality in [0,1]: favors texts with a sane
-    length, low punctuation noise, some stopwords (fluent prose), and
-    plausible mean word length. Deterministic double arithmetic only —
-    mirrored exactly by the SQL oracle."""
-    return quality_score_t(col, tokens(col))
 
 
 def lang_id_t(col: Column, toks: Column) -> Column:

@@ -43,17 +43,8 @@ DATE_KEYWORDS = ("date", "time", "timestamp", "created", "updated", "occurred")
 DATE_PARSE_THRESHOLD = 0.9
 DEFAULT_SAMPLE_ROWS = 1000
 
-# Formats the probe attempts, mirroring what pandas' "mixed" inference
-# accepted in practice for the reference's inputs: Spark patterns for
-# to_timestamp_any, the same formats as strptime patterns for the probe.
-_PROBE_FORMATS = (
-    "yyyy-MM-dd'T'HH:mm:ss",
-    "yyyy-MM-dd HH:mm:ss",
-    "yyyy-MM-dd",
-    "yyyy/MM/dd",
-    "MM/dd/yyyy",
-    "dd-MM-yyyy",
-)
+# strptime formats the date probe attempts, mirroring what pandas'
+# "mixed" inference accepted in practice for the reference's inputs.
 _PY_FORMATS = ("%Y-%m-%dT%H:%M:%S", "%Y-%m-%d %H:%M:%S", "%Y-%m-%d", "%Y/%m/%d", "%m/%d/%Y", "%d-%m-%Y")
 
 
@@ -189,14 +180,6 @@ def low_cardinality_values(
     }
 
 
-def to_timestamp_any(col: F.Column) -> F.Column:
-    """Best-effort string->timestamp over the probe formats (used when a
-    string column typed 'date' participates in a range filter)."""
-    exprs = [F.try_to_timestamp(col)]
-    exprs += [F.try_to_timestamp(col, F.lit(fmt)) for fmt in _PROBE_FORMATS]
-    return F.coalesce(*exprs)
-
-
 def qcol(name: str) -> F.Column:
     """Column reference by LITERAL name — backtick-quoted so headers
     containing dots, spaces, or backticks (CSV ingests) resolve as one
@@ -239,38 +222,45 @@ def table_profile(
     rows-only for oracle purposes since its registers are
     engine-internal)."""
     cols = cols or df.columns
-    numeric = {
-        T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-        T.FloatType, T.DoubleType, T.DecimalType,
-    }
-    # Internal aliases are POSITIONAL (`_nn_{i}`), never f-string-built
-    # from the column name: a name with a dot/space/backtick would break
-    # F.col resolution of the alias (ADVICE round 10).  Input refs go
-    # through qcol for the same reason.
-    aggs, is_num = [], {}
+    one = df.agg(F.count(F.lit(1)).cast("bigint").alias("_n"), *_census_aggs(df, cols, exact_distinct))
+    if exact_distinct:
+        nd = df.agg(*[F.count_distinct(qcol(c)).cast("bigint").alias(f"_nd_{i}") for i, c in enumerate(cols)])
+        one = one.crossJoin(F.broadcast(nd))
+    return one.select(_census_rows(df, cols))
+
+
+def _is_num(df: DataFrame, c: str) -> bool:
+    return _base_type(df.schema[c].dataType) == "numeric"
+
+
+def _census_aggs(df: DataFrame, cols: list[str], exact_distinct: bool) -> list:
+    """The plain per-column census aggregates of :func:`table_profile`
+    and :func:`table_profile_by`: non-null count, min/max (numeric as
+    double, everything else as string) and, in approx mode, the
+    approx distinct count.
+
+    Internal aliases are POSITIONAL (`_nn_{i}`), never f-string-built
+    from the column name: a name with a dot/space/backtick would break
+    F.col resolution of the alias (ADVICE round 10).  Input refs go
+    through qcol for the same reason."""
+    aggs = []
     for i, c in enumerate(cols):
-        dt = df.schema[c].dataType
-        is_num[c] = type(dt) in numeric or isinstance(dt, T.DecimalType)
         aggs.append(F.count(qcol(c)).cast("bigint").alias(f"_nn_{i}"))
         if not exact_distinct:
-            aggs.append(
-                F.approx_count_distinct(qcol(c)).cast("bigint").alias(f"_nd_{i}")
-            )
-        if is_num[c]:
+            aggs.append(F.approx_count_distinct(qcol(c)).cast("bigint").alias(f"_nd_{i}"))
+        if _is_num(df, c):
             aggs.append(F.min(qcol(c)).cast("double").alias(f"_mn_{i}"))
             aggs.append(F.max(qcol(c)).cast("double").alias(f"_mx_{i}"))
         else:
             aggs.append(F.min(qcol(c).cast("string")).alias(f"_mn_{i}"))
             aggs.append(F.max(qcol(c).cast("string")).alias(f"_mx_{i}"))
-    one = df.agg(F.count(F.lit(1)).cast("bigint").alias("_n"), *aggs)
-    if exact_distinct:
-        nd = df.agg(
-            *[
-                F.count_distinct(qcol(c)).cast("bigint").alias(f"_nd_{i}")
-                for i, c in enumerate(cols)
-            ]
-        )
-        one = one.crossJoin(F.broadcast(nd))
+    return aggs
+
+
+def _census_rows(df: DataFrame, cols: list[str]) -> F.Column:
+    """``inline`` over a literal struct array: the one-row-per-column
+    unroll of the census aggregates (sentinels -1.0 / '' fill the
+    inapplicable min/max pair)."""
     rows = []
     for i, c in enumerate(cols):
         # census label: collapse Spark's tz-variant timestamp names
@@ -278,6 +268,7 @@ def table_profile(
         # cross-engine-stable label (DuckDB has only TIMESTAMP).
         dt = df.schema[c].dataType.simpleString()
         dt = "timestamp" if dt.startswith("timestamp") else dt
+        num = _is_num(df, c)
         rows.append(
             F.struct(
                 F.lit(c).alias("column_name"),
@@ -285,13 +276,13 @@ def table_profile(
                 F.col(f"_nn_{i}").alias("n_nonnull"),
                 (F.col("_n") - F.col(f"_nn_{i}")).cast("bigint").alias("n_null"),
                 F.col(f"_nd_{i}").alias("n_distinct"),
-                (F.coalesce(F.col(f"_mn_{i}"), F.lit(-1.0)) if is_num[c] else F.lit(-1.0)).alias("min_num"),
-                (F.coalesce(F.col(f"_mx_{i}"), F.lit(-1.0)) if is_num[c] else F.lit(-1.0)).alias("max_num"),
-                (F.lit("") if is_num[c] else F.coalesce(F.col(f"_mn_{i}"), F.lit(""))).alias("min_str"),
-                (F.lit("") if is_num[c] else F.coalesce(F.col(f"_mx_{i}"), F.lit(""))).alias("max_str"),
+                (F.coalesce(F.col(f"_mn_{i}"), F.lit(-1.0)) if num else F.lit(-1.0)).alias("min_num"),
+                (F.coalesce(F.col(f"_mx_{i}"), F.lit(-1.0)) if num else F.lit(-1.0)).alias("max_num"),
+                (F.lit("") if num else F.coalesce(F.col(f"_mn_{i}"), F.lit(""))).alias("min_str"),
+                (F.lit("") if num else F.coalesce(F.col(f"_mx_{i}"), F.lit(""))).alias("max_str"),
             )
         )
-    return one.select(F.inline(F.array(*rows)))
+    return F.inline(F.array(*rows))
 
 
 def schema_drift(old: DataFrame, new: DataFrame) -> DataFrame:
@@ -398,59 +389,16 @@ def table_profile_by(
     literal-struct ``inline`` over the per-group rows — output is
     |groups| × |columns| rows, never data-sized."""
     cols = cols or [c for c in df.columns if c not in group_cols]
-    numeric = {
-        T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-        T.FloatType, T.DoubleType, T.DecimalType,
-    }
-    # Positional internal aliases + qcol input refs (same dotted-name
-    # rule as table_profile); group keys get safe `_g{j}` aliases so the
-    # exact-distinct join and the final select also survive odd headers.
-    aggs, is_num = [], {}
-    for i, c in enumerate(cols):
-        dt = df.schema[c].dataType
-        is_num[c] = type(dt) in numeric or isinstance(dt, T.DecimalType)
-        aggs.append(F.count(qcol(c)).cast("bigint").alias(f"_nn_{i}"))
-        if not exact_distinct:
-            aggs.append(
-                F.approx_count_distinct(qcol(c)).cast("bigint").alias(f"_nd_{i}")
-            )
-        if is_num[c]:
-            aggs.append(F.min(qcol(c)).cast("double").alias(f"_mn_{i}"))
-            aggs.append(F.max(qcol(c)).cast("double").alias(f"_mx_{i}"))
-        else:
-            aggs.append(F.min(qcol(c).cast("string")).alias(f"_mn_{i}"))
-            aggs.append(F.max(qcol(c).cast("string")).alias(f"_mx_{i}"))
+    # Positional internal aliases + qcol input refs (the _census_aggs
+    # rule); group keys get safe `_g{j}` aliases so the exact-distinct
+    # join and the final select also survive odd headers.
+    aggs = _census_aggs(df, cols, exact_distinct)
     gkeys = [qcol(g).alias(f"_g{j}") for j, g in enumerate(group_cols)]
     gnames = [f"_g{j}" for j in range(len(group_cols))]
-    one = df.groupBy(*gkeys).agg(
-        F.count(F.lit(1)).cast("bigint").alias("_n"), *aggs
-    )
+    one = df.groupBy(*gkeys).agg(F.count(F.lit(1)).cast("bigint").alias("_n"), *aggs)
     if exact_distinct:
         nd = df.groupBy(*gkeys).agg(
-            *[
-                F.count_distinct(qcol(c)).cast("bigint").alias(f"_nd_{i}")
-                for i, c in enumerate(cols)
-            ]
+            *[F.count_distinct(qcol(c)).cast("bigint").alias(f"_nd_{i}") for i, c in enumerate(cols)]
         )
         one = one.join(nd, gnames)
-    rows = []
-    for i, c in enumerate(cols):
-        dt = df.schema[c].dataType.simpleString()
-        dt = "timestamp" if dt.startswith("timestamp") else dt
-        rows.append(
-            F.struct(
-                F.lit(c).alias("column_name"),
-                F.lit(dt).alias("data_type"),
-                F.col(f"_nn_{i}").alias("n_nonnull"),
-                (F.col("_n") - F.col(f"_nn_{i}")).cast("bigint").alias("n_null"),
-                F.col(f"_nd_{i}").alias("n_distinct"),
-                (F.coalesce(F.col(f"_mn_{i}"), F.lit(-1.0)) if is_num[c] else F.lit(-1.0)).alias("min_num"),
-                (F.coalesce(F.col(f"_mx_{i}"), F.lit(-1.0)) if is_num[c] else F.lit(-1.0)).alias("max_num"),
-                (F.lit("") if is_num[c] else F.coalesce(F.col(f"_mn_{i}"), F.lit(""))).alias("min_str"),
-                (F.lit("") if is_num[c] else F.coalesce(F.col(f"_mx_{i}"), F.lit(""))).alias("max_str"),
-            )
-        )
-    return one.select(
-        *[F.col(n).alias(g) for n, g in zip(gnames, group_cols)],
-        F.inline(F.array(*rows)),
-    )
+    return one.select(*[F.col(n).alias(g) for n, g in zip(gnames, group_cols)], _census_rows(df, cols))

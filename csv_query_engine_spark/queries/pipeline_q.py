@@ -848,16 +848,15 @@ def embedding_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-probe, exact rescore inside the probed buckets).
 
     ORACLE-PAIRED as of round 13 (was rows-only since round 1 — the
-    `quantized_topk` graduation applied to LSH): the registered form
-    runs ``quantized=True``, so signatures are exact int64 sign
-    decisions over the scale-6 planes, probe buckets are integer XOR
-    flips, and the rescore is the FLOOR-quantized integer cosine —
-    sql_lsh_topk replays candidates → rescore → partitioned rank
-    bit-for-bit, the approximate RECALL trade included.  Float-mode
-    recall vs brute force stays asserted in tests."""
+    `quantized_topk` graduation applied to LSH): signatures are exact
+    int64 sign decisions over the scale-6 planes, probe buckets are
+    integer XOR flips, and the rescore is the FLOOR-quantized integer
+    cosine — sql_lsh_topk replays candidates → rescore → partitioned
+    rank bit-for-bit, the approximate RECALL trade included.  Planted-
+    neighbour recall stays asserted in tests."""
     e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     q = e.filter(F.col("vec_id") % 100 == 0).select(F.col("vec_id").alias("query_id"), F.col("embedding"))
-    return sim.lsh_bucket_topk(e, q, k=5, quantized=True).orderBy("query_id", "rank")
+    return sim.lsh_bucket_topk(e, q, k=5).orderBy("query_id", "rank")
 
 
 _SEMSURV_TABLE = (
@@ -887,18 +886,15 @@ def embedding_near_dup_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact verification ≥ 0.95).
 
     ORACLE-PAIRED as of round 13 (was rows-only): the registered form
-    runs ``quantized=True`` over the planted-copy corpus
-    (`_semsurv_corpus` — the raw harness embeddings are
-    near-orthogonal, max off-diagonal cosine 0.601 measured, so the
-    raw-corpus result is an honest zero; the planted copies make the
-    pairing non-vacuous: every (source, copy) pair emits with cosine
-    exactly 1.0).  sql_embedding_near_dup_pairs replays banding →
-    bucket caps → in-bucket pairs → integer-cosine verify.  Float-mode
-    recall/precision behavior stays covered by the planted-pair pytest
+    runs over the planted-copy corpus (`_semsurv_corpus` — the raw
+    harness embeddings are near-orthogonal, max off-diagonal cosine
+    0.601 measured, so the raw-corpus result is an honest zero; the
+    planted copies make the pairing non-vacuous: every (source, copy)
+    pair emits with cosine exactly 1.0).  sql_embedding_near_dup_pairs replays banding →
+    bucket caps → in-bucket pairs → integer-cosine verify.  Recall/
+    precision behavior stays covered by the planted-pair pytest
     (tests/test_pipeline.py)."""
-    return sim.embedding_near_dup_pairs(
-        _semsurv_corpus(spark, sf_dir), quantized=True
-    ).orderBy("id_a", "id_b")
+    return sim.embedding_near_dup_pairs(_semsurv_corpus(spark, sf_dir)).orderBy("id_a", "id_b")
 
 
 @register("embedding_contamination_banded", sim.sql_contamination_banded())
@@ -908,23 +904,20 @@ def embedding_contamination_banded_q(spark: SparkSession, sf_dir: str) -> DataFr
     candidates, exact cosine verification — neither side broadcasts,
     so a benchmark UNION in the millions screens a 100 TB corpus.
 
-    FULLY ORACLE-PAIRED as of round 12 (was rows-only): the registered
-    form runs ``quantized=True`` — scale-6 integer planes and
-    coordinates make every sign decision and the verify cosine exact
-    integer/IEEE arithmetic, so the DuckDB twin
+    FULLY ORACLE-PAIRED as of round 12 (was rows-only): scale-6
+    integer planes and coordinates make every sign decision and the
+    verify cosine exact integer/IEEE arithmetic, so the DuckDB twin
     (sql_contamination_banded) replays signatures → banding → per-side
     caps → candidate join → integer-cosine verify → argmax verdict
     bit-for-bit, approximate RECALL included (the Bloom-decontamination
     precedent: a reproducible pipeline can certify its own false-
-    negative trade).  Float-mode recall/precision/planted-copy
-    properties stay pinned in tests/test_similarity_pq.py; compare
+    negative trade).  Recall/precision/planted-copy properties stay
+    pinned in tests/test_similarity_pq.py; compare
     `embedding_semantic_contamination` (the exact, bounded-bench
     face)."""
     e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     bench = e.filter(F.col("vec_id") % 37 == 0)
-    return sim.semantic_contamination_banded(
-        e, bench, threshold=0.9, quantized=True
-    ).orderBy("vec_id")
+    return sim.semantic_contamination_banded(e, bench, threshold=0.9).orderBy("vec_id")
 
 
 @register(

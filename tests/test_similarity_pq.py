@@ -3,10 +3,18 @@ contract, and empty-query edge case."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from csv_query_engine_spark.pipeline.similarity import brute_force_topk, pq_topk
-from tests.conftest import SF_SMOKE
+from csv_query_engine_spark.pipeline.similarity import (
+    brute_force_topk,
+    pq_topk,
+    sql_contamination_banded,
+    sql_embedding_near_dup_pairs,
+    sql_lsh_topk,
+)
+from tests.compare import assert_results_match
+from tests.conftest import SF_ORACLE, SF_SMOKE
 
 
 def test_pq_recall_at_5_on_harness_embeddings(spark):
@@ -234,7 +242,7 @@ def test_banded_contamination_quantized_mode_catches_plants(spark):
     got = {
         r["vec_id"]: (r["max_cosine"], r["matched_bench_id"])
         for r in semantic_contamination_banded(
-            corpus, bench, threshold=0.9, quantized=True
+            corpus, bench, threshold=0.9
         ).collect()
     }
     exact = {
@@ -251,3 +259,61 @@ def test_banded_contamination_quantized_mode_catches_plants(spark):
         assert got[r["vec_id"]][1] == r["vec_id"]
         assert got[r["vec_id"]][0] >= 0.999
         assert r["vec_id"] + 9_000_000 in got
+
+
+def _lsh_default(spark, e):
+    from csv_query_engine_spark.pipeline.similarity import lsh_bucket_topk
+
+    q = e.filter(F.col("vec_id") % 100 == 0).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    return lsh_bucket_topk(e, q), sql_lsh_topk()
+
+
+def _near_dup_default(spark, e):
+    from csv_query_engine_spark.pipeline.similarity import embedding_near_dup_pairs
+    from csv_query_engine_spark.queries.pipeline_q import _SEMSURV_TABLE, _semsurv_corpus
+
+    # the raw embeddings have no pair above 0.95: the planted copies
+    # make the comparison non-vacuous
+    out = embedding_near_dup_pairs(_semsurv_corpus(spark, SF_ORACLE))
+    return out, sql_embedding_near_dup_pairs(table=_SEMSURV_TABLE)
+
+
+# bench rows perturbed to cosine just under 1, so the verify cosine's
+# last digits show (exact bench copies score 1.0 under any rounding)
+_PERTURBED_TABLE = (
+    "(SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding FROM embeddings "
+    "UNION ALL SELECT vec_id + 9000000 AS vec_id, list_transform(embedding, "
+    "x -> CAST(x AS DOUBLE) * CAST(1.01 AS DOUBLE) + CAST(0.001 AS DOUBLE)) AS embedding "
+    "FROM embeddings WHERE vec_id % 37 = 0) ct"
+)
+
+
+def _banded_default(spark, e):
+    from csv_query_engine_spark.pipeline.similarity import semantic_contamination_banded
+
+    bench = e.filter(F.col("vec_id") % 37 == 0)
+    planted = bench.select(
+        (F.col("vec_id") + 9_000_000).alias("vec_id"),
+        F.transform("embedding", lambda x: x.cast("double") * F.lit(1.01) + F.lit(0.001)).alias("embedding"),
+    )
+    out = semantic_contamination_banded(e.unionByName(planted), bench)
+    return out, sql_contamination_banded(corpus_table=_PERTURBED_TABLE)
+
+
+@pytest.mark.parametrize(
+    "build", [_lsh_default, _near_dup_default, _banded_default], ids=lambda f: f.__name__[1:]
+)
+def test_default_call_equals_duckdb_twin(spark, duck, build):
+    """A DEFAULT call of each banded embedding-LSH operator is the
+    reproducible form: it equals its DuckDB twin row for row, so no
+    library caller gets a result the oracle cannot replay."""
+    from csv_query_engine_spark.io.readers import load_tables
+    from csv_query_engine_spark.pipeline import cache_scope
+
+    e = load_tables(spark, SF_ORACLE, ("embeddings",))["embeddings"].select("vec_id", "embedding")
+    with cache_scope(spark):
+        out, sql = build(spark, e)
+        assert out.count() > 0
+        assert_results_match(out, duck.sql(sql), build.__name__)
