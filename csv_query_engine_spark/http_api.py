@@ -100,7 +100,7 @@ def create_app(engine: QueryEngine):
     def ops():
         """BEYOND-reference: list the engine's registered operator
         library (every SURVEY.md §2 / §8 query) with its
-        oracle-bearing flag — the service face of the 163-operator
+        oracle-bearing flag — the service face of the operator
         registry the CLI driver exercises."""
         from csv_query_engine_spark.queries import all_oracles, all_queries
 

@@ -1,21 +1,10 @@
-from csv_query_engine_spark.io.readers import (
-    TABLE_NAMES,
-    load_tables,
-    read_csv,
-    read_json,
-    read_parquet,
-    register_view,
-)
-from csv_query_engine_spark.io.writers import write_csv, write_json, write_parquet
+from csv_query_engine_spark.io.readers import TABLE_NAMES, load_tables, read_csv
+from csv_query_engine_spark.io.writers import write_csv, write_parquet
 
 __all__ = [
     "TABLE_NAMES",
     "load_tables",
     "read_csv",
-    "read_json",
-    "read_parquet",
-    "register_view",
     "write_csv",
-    "write_json",
     "write_parquet",
 ]

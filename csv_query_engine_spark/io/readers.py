@@ -61,24 +61,6 @@ def read_csv(
     return reader.csv(path)
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-def read_json(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def register_view(df: DataFrame, name: str = "df") -> DataFrame:
-    """Bind a DataFrame to a SQL name (reference A4: ``con.register('df',
-    pdf)``). Temp views are session-scoped metadata only — no copy."""
-    df.createOrReplaceTempView(name)
-    return df
-
-
 # (session, abspath, mtime_ns, size) -> normalized DataFrame.  A
 # DataFrame is a LAZY plan — memoizing it caches driver-side METADATA
 # only (file listing + parquet footer schema, measured ~0.11-0.14 s per

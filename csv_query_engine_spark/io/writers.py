@@ -25,10 +25,6 @@ def write_csv(df: DataFrame, path: str, mode: str = "overwrite", header: bool = 
     df.write.mode(mode).option("header", str(header).lower()).csv(path)
 
 
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).json(path)
-
-
 def write_orc(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
     w = df.write.mode(mode)
     if partition_by:

@@ -824,15 +824,9 @@ def generate_sql_multi_table(
             frontier = nxt
         return None
 
-    for t1, t2 in itertools.combinations(sorted(tables), 2):
-        if not covers((t1, t2)):
-            continue
-        combined = list(tables[t1]) + list(tables[t2])
-        path = _shortest_path(t1, t2)
-        if path is None:
-            raise ValueError(
-                f"columns span {t1} and {t2} but no key-suffix join path exists"
-            )
+    def _joined_sql(path: list[str], owner_tables: tuple[str, ...]) -> str:
+        """The extended grammar over the owner tables' columns, FROM the
+        join along ``path``; column names must be unique path-wide."""
         path_names = [n.lower() for t in path for n in colnames[t]]
         if len(set(path_names)) != len(path_names):
             raise ValueError(
@@ -844,12 +838,22 @@ def generate_sql_multi_table(
             fc += f" JOIN {nxt} ON {_edge(prev, nxt)}"
         return generate_sql_extended(
             question,
-            combined,
-            table=t1,
+            [c for t in owner_tables for c in tables[t]],
+            table=path[0],
             from_clause=fc,
             column_values=_plan_values(tuple(path)),
-            **_kwargs((t1, t2)),
+            **_kwargs(owner_tables),
         )
+
+    for t1, t2 in itertools.combinations(sorted(tables), 2):
+        if not covers((t1, t2)):
+            continue
+        path = _shortest_path(t1, t2)
+        if path is None:
+            raise ValueError(
+                f"columns span {t1} and {t2} but no key-suffix join path exists"
+            )
+        return _joined_sql(path, (t1, t2))
     # three owner tables (round 13 — "top N <entity-table> per
     # <group-table> by <metric>" spans entity + group + fact): stitch
     # two shortest paths through a shared middle and take the SHORTEST
@@ -873,24 +877,7 @@ def generate_sql_multi_table(
                 best = cand
     if best is not None:
         _, path, trio = best
-        combined = [c for t in trio for c in tables[t]]
-        path_names = [n.lower() for t in path for n in colnames[t]]
-        if len(set(path_names)) != len(path_names):
-            raise ValueError(
-                f"ambiguous columns across {' -> '.join(path)}: "
-                "cannot bind the question safely"
-            )
-        fc = path[0]
-        for prev, nxt in zip(path, path[1:]):
-            fc += f" JOIN {nxt} ON {_edge(prev, nxt)}"
-        return generate_sql_extended(
-            question,
-            combined,
-            table=path[0],
-            from_clause=fc,
-            column_values=_plan_values(tuple(path)),
-            **_kwargs(trio),
-        )
+        return _joined_sql(path, trio)
     raise ValueError(
         "question references columns from more than three joinable tables"
     )

@@ -142,51 +142,6 @@ def _in_bucket_pairs(ids: Column) -> Column:
     )
 
 
-def minhash_with_grams(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 64,
-    shingle_k: int = 5,
-) -> DataFrame:
-    """(id, grams, hashes, sig): ``num_hashes``-slot MinHash signature
-    per doc via ONE-PERMUTATION HASHING (Li, Owen, Zhang 2012) with
-    deterministic densification — each shingle is hashed ONCE
-    (xxhash64), the hash's top log2(K) bits pick a signature slot, and
-    each slot keeps its minimum. Empty slots (short docs) borrow
-    deterministically from the doc's non-empty minima, so two docs with
-    identical shingle sets always get identical signatures (the property
-    LSH banding needs).
-
-    Why OPH and not K independent hash functions: the K-rehash form
-    costs O(K·|shingles|) hash evaluations per doc — measured ~6 s of
-    the sf0.1 signature stage as an interpreted 64× higher-order-
-    function loop (and the explode + 64-min-aggs alternative is worse:
-    64 aggregate columns push HashAggregate off whole-stage codegen,
-    measured 57 s). OPH is O(|shingles|): one explode keyed by (id,
-    slot) with a codegen'd map-side-combined MIN, then a ≤K-row
-    assembly per doc. At 100 TB that is a 64× reduction in hash
-    compute for the same s-curve behavior (OPH's slot-collision
-    fraction is an unbiased Jaccard estimator, same as classic
-    MinHash).
-
-    ``num_hashes`` must be a power of two (slot = top bits of the
-    hash).
-
-    Cache lifetime is CALLER-OWNED — wrap the call in
-    ``pipeline.cache_scope(spark)`` to release the persisted
-    intermediates on exit (the one library-wide convention)."""
-    from pyspark.storagelevel import StorageLevel
-
-    base = _hashed_shingles(df, id_col, text_col, shingle_k).persist(StorageLevel.MEMORY_AND_DISK)
-    # Pin the cache before the join fans out into two leaf jobs (the
-    # cache-race rule): both legs would re-run the shingle scan cold.
-    _pin(base)
-    return base.join(_oph_signatures(base, num_hashes), "id").select(
-        "id", "grams", "hashes", "sig"
-    )
-
-
 def _hashed_shingles(
     df: DataFrame, id_col: str, text_col: str, shingle_k: int,
     hash_mode: str = "xxhash64",
@@ -231,12 +186,32 @@ def _hashed_shingles(
 def _oph_signatures(
     hashed: DataFrame, num_hashes: int, hash_bits: int = 64
 ) -> DataFrame:
-    """(id, sig) one-permutation-hashing signatures from a
-    (id, hashes) table — see :func:`minhash_with_grams` for the
-    algorithm and the measured rationale. ``hashed`` is consumed once
-    (one explode); callers with multiple consumers persist it.
-    ``hash_bits`` is the width of the input hashes (64 for xxhash64,
-    32 for the md5 recipe) — the slot is always the TOP log2(K) bits."""
+    """(id, sig): ``num_hashes``-slot MinHash signatures from a
+    (id, hashes) table via ONE-PERMUTATION HASHING (Li, Owen, Zhang
+    2012) with deterministic densification — each shingle is hashed
+    ONCE, the hash's top log2(K) bits pick a signature slot, and each
+    slot keeps its minimum. Empty slots (short docs) borrow
+    deterministically from the doc's non-empty minima, so two docs with
+    identical shingle sets always get identical signatures (the property
+    LSH banding needs).
+
+    Why OPH and not K independent hash functions: the K-rehash form
+    costs O(K·|shingles|) hash evaluations per doc — measured ~6 s of
+    the sf0.1 signature stage as an interpreted 64× higher-order-
+    function loop (and the explode + 64-min-aggs alternative is worse:
+    64 aggregate columns push HashAggregate off whole-stage codegen,
+    measured 57 s). OPH is O(|shingles|): one explode keyed by (id,
+    slot) with a codegen'd map-side-combined MIN, then a ≤K-row
+    assembly per doc. At 100 TB that is a 64× reduction in hash
+    compute for the same s-curve behavior (OPH's slot-collision
+    fraction is an unbiased Jaccard estimator, same as classic
+    MinHash).
+
+    ``num_hashes`` must be a power of two (slot = top bits of the
+    hash). ``hashed`` is consumed once (one explode); callers with
+    multiple consumers persist it. ``hash_bits`` is the width of the
+    input hashes (64 for xxhash64, 32 for the md5 recipe) — the slot
+    is always the TOP log2(K) bits."""
     bits = (num_hashes - 1).bit_length()
     if num_hashes != 1 << bits:
         raise ValueError(f"num_hashes must be a power of two, got {num_hashes}")
@@ -999,7 +974,6 @@ def near_dup_clusters(
     span_n: int = 8,
     ngram_n: int = 3,
     max_span_docs: int = 64,
-    algorithm: str = "propagation",
 ) -> DataFrame:
     """End-to-end near-dup clustering: span-blocked candidates → exact
     word-``ngram_n``-gram Jaccard verification ≥ threshold → connected
@@ -1008,11 +982,8 @@ def near_dup_clusters(
     near-dup chains (A≈B, B≈C) collapse to ONE survivor even when A and
     C are not directly similar. Fully deterministic, so the DuckDB twin
     (recursive CTE over the same edge set) verifies it end to end.
-
-    ``algorithm``: ``"propagation"`` (min-label, O(diameter) rounds —
-    right for the shallow clumps real near-dup graphs form) or
-    ``"star"`` (large-star/small-star contraction, O(log n) rounds —
-    the adversarial-long-chain remedy; property-tested equivalent)."""
+    Components come from min-label propagation (O(diameter) rounds —
+    right for the shallow clumps real near-dup graphs form)."""
     from pyspark.storagelevel import StorageLevel
 
     from csv_query_engine_spark.pipeline.text import _ngram_rows
@@ -1047,8 +1018,7 @@ def near_dup_clusters(
         .filter(jaccard(F.col("grams_a"), F.col("grams_b")) >= threshold)
         .select("id_a", "id_b")
     )
-    cc = connected_components_star if algorithm == "star" else connected_components
-    labels = cc(df.select(F.col(id_col).alias("id")), edges)
+    labels = connected_components(df.select(F.col(id_col).alias("id")), edges)
     sizes = labels.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (
         labels.join(sizes, "cluster_id")
@@ -1103,13 +1073,8 @@ def simhash_column() -> Column:
     Python is justified here: the 64-lane majority vote has no built-in
     expression; the UDF is vectorized per Arrow batch, not per row.
 
-    MEASURED WINNER (round-11 A/B vs :func:`simhash_table_expr`, the
-    explode + codegen'd-md5 + packed-counter form): the UDF is 2-3×
-    faster warm at sf0.1 (0.97 s vs 2.37 s) AND at 10× docs (1.16 s vs
-    3.82 s) — C md5 plus one numpy matvec per batch beats per-token JVM
-    md5/conv/substring plus a token-row shuffle (BASELINE.md round 11).
-    Unlike the gram-build sites this per-row loop is hashlib-dominated,
-    not interpreted-HOF-dominated, so the usual explode port loses.
+    An explode + codegen'd-md5 form measured 2-3× slower warm at sf0.1
+    and at 10× docs (BASELINE.md round 11), so this UDF is the only form.
 
     The UDF body is self-contained (imports + logic inline) so cloudpickle
     ships it by value — workers cannot import this package."""
@@ -1139,75 +1104,6 @@ def simhash_column() -> Column:
         return pd.Series(out)
 
     return simhash_udf(normalize_text(F.col("text")))
-
-
-def simhash_table_expr(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, sig) SimHash signatures with NO Python in the pipeline —
-    the explode + codegen'd-md5 alternative to :func:`simhash_column`'s
-    Arrow UDF (round-11 A/B, the round-10 verdict's last Python-heavy
-    dedup hot path): tokens explode to rows, each token's 64-bit hash
-    comes from the md5 recipe (first 16 hex chars, big-endian — bit-
-    identical to the UDF's ``digest()[:8]``), and the 64-lane majority
-    vote aggregates through SIXTEEN packed longs instead of 64 agg
-    columns (the measured minhash trap: 64 sums push HashAggregate off
-    whole-stage codegen).  Packing: lane j maps to field ``j // 16`` of
-    pack ``j % 16``, fields spaced 15 bits — 4 fields/long, so a doc of
-    ≤ 32767 tokens can never carry between fields and the top field
-    tops out at 2^45·32767 ≈ 1.2e18, far inside int64 (no ANSI
-    overflow).  Token counts past the cap RAISE (no silent cap).
-
-    Scale: one explode (rows = total tokens, combined map-side to 16
-    longs + count per doc), one shuffle keyed by id, one codegen'd
-    per-doc reconstruction — the same shape as the OPH signature build.
-    Empty/token-less docs get sig = 0 (the UDF's convention) via the
-    left join back to the id spine."""
-    spine = df.select(F.col(id_col).alias("id"))
-    toks = (
-        _spread(df)
-        .select(
-            F.col(id_col).alias("id"),
-            F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("tok"),
-        )
-        .filter(F.col("tok") != "")
-    )
-    hex32 = F.md5(F.col("tok"))
-    h = F.shiftleft(F.conv(F.substring(hex32, 1, 8), 16, 10).cast("long"), 32).bitwiseOR(
-        F.conv(F.substring(hex32, 9, 8), 16, 10).cast("long")
-    )
-    packs = []
-    for c in range(16):
-        expr = None
-        for m in range(4):
-            bit = F.shiftrightunsigned(h, c + 16 * m).bitwiseAND(F.lit(1).cast("long"))
-            term = F.shiftleft(bit, 15 * m)
-            expr = term if expr is None else expr.bitwiseOR(term)
-        packs.append(F.sum(expr).alias(f"_p{c}"))
-    agg = toks.groupBy("id").agg(F.count(F.lit(1)).alias("_n"), *packs)
-    guard = F.when(
-        F.col("_n") > 32767,
-        F.raise_error(
-            F.concat(
-                F.lit("simhash_table_expr: doc "),
-                F.col("id").cast("string"),
-                F.lit(" has more than 32767 tokens — packed majority counters would carry; "
-                      "split the doc or use simhash_column"),
-            )
-        ).cast("long"),
-    ).otherwise(F.col("_n"))
-    sig = None
-    for j in range(64):
-        ones = F.shiftrightunsigned(F.col(f"_p{j % 16}"), 15 * (j // 16)).bitwiseAND(
-            F.lit(0x7FFF).cast("long")
-        )
-        bit = (ones * 2 > guard).cast("long")
-        term = F.shiftleft(bit, j)
-        sig = term if sig is None else sig.bitwiseOR(term)
-    built = agg.select("id", sig.alias("sig"))
-    return spine.join(built, "id", "left").select(
-        "id", F.coalesce(F.col("sig"), F.lit(0).cast("long")).alias("sig")
-    )
 
 
 def simhash_near_dup_pairs(
@@ -1400,6 +1296,44 @@ def incremental_dedup(
 # --------------------------------------------- AllPairs prefix filtering
 
 
+def _persisted_gram_hashes(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """(id, gh): one row per distinct word n-gram of each doc, keyed by
+    its 8-byte xxhash64 — the persisted input of both AllPairs faces
+    (4 consumers: frequency counts, doc sizes, prefix ranks,
+    verification arrays). Cache lifetime is caller-owned."""
+    from pyspark.storagelevel import StorageLevel
+
+    return (
+        _spread(df)
+        .select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("_toks"))
+        .select("id", F.explode(token_ngrams(F.col("_toks"), n)).alias("_g"))
+        .select("id", F.xxhash64("_g").alias("gh"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+
+
+def _rarest_first_prefix(g: DataFrame, threshold: float) -> DataFrame:
+    """(id, gh) prefix rows of an (id, gh) table: each doc's first
+    |A| − ceil(t·|A|) + 1 grams in the global rarest-first order (ties
+    broken by hash). Ranking is an id-partitioned window, never
+    unpartitioned."""
+    from pyspark.sql import Window as W
+
+    cnt = g.groupBy("gh").agg(F.count(F.lit(1)).alias("_c"))
+    sizes = g.groupBy("id").agg(F.count(F.lit(1)).alias("_sz"))
+    prefix_len = F.col("_sz") - F.ceil(F.lit(threshold) * F.col("_sz")) + 1
+    return (
+        g.join(cnt, "gh")
+        .join(sizes, "id")  # id-keyed, co-partitioned with the window below
+        .withColumn(
+            "_rk",
+            F.row_number().over(W.partitionBy("id").orderBy(F.col("_c"), F.col("gh"))),
+        )
+        .filter(F.col("_rk") <= prefix_len)
+        .select("id", "gh")
+    )
+
+
 def allpairs_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1426,7 +1360,7 @@ def allpairs_jaccard_pairs(
     frequency counts, doc sizes, prefix ranks, verification arrays);
     prefix ranking is an id-partitioned window (never unpartitioned);
     the candidate join keys on the 8-byte gram hash (repo convention —
-    collision odds documented at minhash_with_grams) and dedups on
+    collision odds documented in minhash_lsh_pairs) and dedups on
     (id_a, id_b); verification joins the persisted hashed-gram arrays
     and keeps exact-Jaccard survivors.  At corpus scale the win over
     the quadratic form is the prefix cut; against LSH it trades the
@@ -1434,34 +1368,13 @@ def allpairs_jaccard_pairs(
     Cache lifetime is CALLER-OWNED — wrap the call in
     ``pipeline.cache_scope(spark)`` to release the persisted
     intermediates on exit (the one library-wide convention)."""
-    from pyspark.sql import Window as W
-    from pyspark.storagelevel import StorageLevel
-
-    g = (
-        _spread(df)
-        .select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("_toks"))
-        .select("id", F.explode(token_ngrams(F.col("_toks"), n)).alias("_g"))
-        .select("id", F.xxhash64("_g").alias("gh"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    g = _persisted_gram_hashes(df, id_col, text_col, n)
     # Pin: `g` feeds the gram-count aggregate, the doc-size aggregate,
     # the prefix join and the candidate join-back — four independent
     # leaf jobs that each re-ran the tokenize+explode cold (cache-race
     # rule).
     _pin(g)
-    cnt = g.groupBy("gh").agg(F.count(F.lit(1)).alias("_c"))
-    sizes = g.groupBy("id").agg(F.count(F.lit(1)).alias("_sz"))
-    prefix_len = F.col("_sz") - F.ceil(F.lit(threshold) * F.col("_sz")) + 1
-    ranked = (
-        g.join(cnt, "gh")
-        .join(sizes, "id")  # id-keyed, co-partitioned with the window below
-        .withColumn(
-            "_rk",
-            F.row_number().over(W.partitionBy("id").orderBy(F.col("_c"), F.col("gh"))),
-        )
-        .filter(F.col("_rk") <= prefix_len)
-        .select("id", "gh")
-    )
+    ranked = _rarest_first_prefix(g, threshold)
     cand = (
         ranked.select(F.col("id").alias("id_a"), "gh")
         .join(ranked.select(F.col("id").alias("id_b"), "gh"), "gh")
@@ -1513,29 +1426,8 @@ def containment_pairs(
     Cache lifetime is CALLER-OWNED — wrap the call in
     ``pipeline.cache_scope(spark)`` to release the persisted
     intermediates on exit (the one library-wide convention)."""
-    from pyspark.sql import Window as W
-    from pyspark.storagelevel import StorageLevel
-
-    g = (
-        _spread(df)
-        .select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("_toks"))
-        .select("id", F.explode(token_ngrams(F.col("_toks"), n)).alias("_g"))
-        .select("id", F.xxhash64("_g").alias("gh"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    cnt = g.groupBy("gh").agg(F.count(F.lit(1)).alias("_c"))
-    sizes = g.groupBy("id").agg(F.count(F.lit(1)).alias("_sz"))
-    prefix_len = F.col("_sz") - F.ceil(F.lit(threshold) * F.col("_sz")) + 1
-    prefix = (
-        g.join(cnt, "gh")
-        .join(sizes, "id")
-        .withColumn(
-            "_rk",
-            F.row_number().over(W.partitionBy("id").orderBy(F.col("_c"), F.col("gh"))),
-        )
-        .filter(F.col("_rk") <= prefix_len)
-        .select("id", "gh")
-    )
+    g = _persisted_gram_hashes(df, id_col, text_col, n)
+    prefix = _rarest_first_prefix(g, threshold)
     cand = (
         prefix.select(F.col("id").alias("id_a"), "gh")
         .join(g.select(F.col("id").alias("id_b"), "gh"), "gh")

@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 from csv_query_engine_spark.pipeline.dedup import (
     connected_components,
     connected_components_star,
-    near_dup_clusters,
 )
 
 
@@ -86,23 +85,6 @@ def test_propagation_warns_when_truncated(spark):
         got = _cc(spark, connected_components, edges, 10, max_iter=2)
     # and the labels really are incomplete — that's what the warning is for
     assert set(got.values()) != {0}
-
-
-def test_near_dup_clusters_star_matches_propagation(spark):
-    base = "the quick brown fox jumps over the lazy dog again and again every day " * 3
-    rows = [
-        (0, base),
-        (1, base + " tail"),
-        (2, base + " tail two"),
-        (3, "completely different text about spark shuffles and parquet readers here"),
-        (4, "another unrelated document mentioning tokenizers embeddings and lsh"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    prop = {r["doc_id"]: (r["cluster_id"], r["cluster_size"], r["is_survivor"])
-            for r in near_dup_clusters(df).collect()}
-    star = {r["doc_id"]: (r["cluster_id"], r["cluster_size"], r["is_survivor"])
-            for r in near_dup_clusters(df, algorithm="star").collect()}
-    assert star == prop
 
 
 def test_quality_filter_null_text_emits_row(spark):
