@@ -70,7 +70,8 @@ def doc_term_frequencies(
     incremental unit of the retrieval index: postings of disjoint doc
     sets merge by plain UNION (each doc's rows are final on arrival),
     which is what the streaming index build rides
-    (streaming/events.py::bm25_index_stream).
+    (streaming/events.py::route_bm25_batch, run through
+    ``run_batches``).
 
     The tf shuffle keys on the token STRING, deliberately diverging
     from the hashed-gram idiom (CLAUDE.md): these are single

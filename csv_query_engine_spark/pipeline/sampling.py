@@ -31,7 +31,6 @@ __all__ = [
     "stratified_fixed_sample",
     "deterministic_sample",
     "token_budget_sample",
-    "token_budget_sample_approx",
     "temperature_mix_weights",
     "weighted_sample_topk",
 ]
@@ -366,64 +365,6 @@ def temperature_mix_weights(
         ),
     )
     return out
-
-
-def token_budget_sample_approx(
-    df: DataFrame,
-    stratum: str,
-    key: Column,
-    weight: Column,
-    budget: int,
-    salt: str = "mix-",
-    n_buckets: int = 1024,
-) -> DataFrame:
-    """The SORT-FREE scale variant of :func:`token_budget_sample` — the
-    two-pass plan its docstring promises for strata too large to sort.
-
-    Pass 1: rows land in ``n_buckets`` histogram buckets by the TOP
-    BITS of their content hash — order-compatible with the (hash, key)
-    sort the exact form uses (hex string order == numeric order for
-    md5's lowercase hex, so the bucket index is monotone in the exact
-    form's sort key); one (stratum, bucket) aggregation + a tiny
-    per-stratum running sum over the bucket table picks, per stratum,
-    the largest bucket prefix whose total weight stays <= ``budget``.
-    Pass 2: one broadcast join + filter keeps rows whose bucket falls
-    inside the prefix — a narrow map-side pass, NO per-stratum sort of
-    the corpus anywhere.
-
-    Guarantees: selected mass <= budget always; under-fill is bounded
-    by the mass of the first excluded bucket (~corpus_mass/n_buckets
-    for uniform hashes — raise ``n_buckets`` to tighten); the kept set
-    is a PREFIX of the exact form's hash order, so it is a subset of
-    what the exact form keeps for the same budget plus at most one
-    boundary bucket's difference, with the same content-determinism
-    (membership is a pure function of content hash + budget).
-
-    The window in pass 1 runs over ``n_buckets`` rows per stratum — a
-    bucket TABLE, not the corpus; that is the whole trick."""
-    if n_buckets & (n_buckets - 1):
-        raise ValueError("n_buckets must be a power of two")
-    hex8 = F.substring(F.md5(F.concat(F.lit(salt), key.cast("string"))), 1, 8)
-    shift = 32 - (n_buckets.bit_length() - 1)
-    bucket = F.shiftright(F.conv(hex8, 16, 10).cast("long"), shift).alias("_bkt")
-    rows = df.withColumn("_bkt", bucket)
-    hist = rows.groupBy(stratum, "_bkt").agg(F.sum(weight.cast("long")).alias("_bw"))
-    w = (
-        W.partitionBy(stratum)
-        .orderBy("_bkt")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    cutoff = (
-        hist.withColumn("_cum", F.sum("_bw").over(w))
-        .filter(F.col("_cum") <= budget)
-        .groupBy(stratum)
-        .agg(F.max("_bkt").alias("_max_bkt"))
-    )
-    return (
-        rows.join(F.broadcast(cutoff), stratum, "inner")
-        .filter(F.col("_bkt") <= F.col("_max_bkt"))
-        .drop("_bkt", "_max_bkt")
-    )
 
 
 def weighted_sample_topk(

@@ -501,7 +501,9 @@ def enrich_with_dim(stream: DataFrame, dim: DataFrame, on: str, how: str = "left
 #
 # Every streaming store below goes through these helpers: one
 # batch-partition write, one missing-path read rule, one Hadoop-FS
-# lookup, one partition delete and one foreachBatch runner.
+# lookup, one partition delete and one foreachBatch runner.  A store
+# is a ``route_*_batch`` (its one write entry) plus ``read_*`` (its
+# one read entry); a stream drives it through :func:`run_batches`.
 
 
 def _write_batch(df: DataFrame, path: str, batch_id: int | None = None) -> None:
@@ -537,11 +539,24 @@ def _read_store_or_empty(spark: SparkSession, path: str, schema) -> DataFrame:
         raise
 
 
-def _run_batches(stream: DataFrame, checkpoint: str, route, **kwargs):
-    """Start ``stream`` as a checkpointed foreachBatch query calling
-    ``route(batch_df, batch_id, **kwargs)`` per micro-batch over what
-    is available now; returns the started query (callers
-    ``awaitTermination``)."""
+def run_batches(stream: DataFrame, checkpoint: str, route, **kwargs):
+    """Run a store on a stream: start ``stream`` as a foreachBatch
+    query calling ``route(batch_df, batch_id, **kwargs)`` per
+    micro-batch, with ``checkpoint`` as its checkpoint location and an
+    ``availableNow`` trigger (it folds what the source holds now, then
+    stops); returns the started query (callers ``awaitTermination``).
+
+        run_batches(stream, ckpt, route_cm_batch, key_col="k", cells_path=p)
+
+    foreachBatch alone is at-least-once: a crash after a route's writes
+    but before the checkpoint commit replays that batch under the same
+    ``batch_id``.  Every ``route_*_batch`` writes batch_id-keyed with
+    dynamic partition overwrite (:func:`_write_batch`), so a replay
+    rewrites its own partitions instead of appending, and stores that
+    read their own earlier batches filter ``batch_id < current``.
+    Checkpoint offsets plus that idempotent write make the end-to-end
+    result effectively-once.  The checkpoint holds only source offsets;
+    all store state lives in the partitioned parquet tables."""
     return (
         stream.writeStream.foreachBatch(lambda df, b: route(df, b, **kwargs))
         .option("checkpointLocation", checkpoint)
@@ -615,41 +630,21 @@ def route_quality_batch(batch_df, batch_id: int, checks, good_path: str, quarant
     partitions; a crash BETWEEN the two writes heals on replay the same
     way. Module-level (not a closure) so the replay contract is
     testable directly — foreachBatch functions run on the driver, so
-    package imports here are safe."""
+    package imports here are safe.
+
+    Violating rows land in ``quarantine_path`` WITH their
+    ``failed_rules`` (pipeline/validation.py::split_by_rules), so bad
+    data parks for repair instead of poisoning downstream state or
+    failing the query.  This is the streaming face of the quality
+    layer: check_constraints gates a BATCH before publication,
+    split_by_rules routes a STREAM row by row.
+
+    Scale: the split is pure per-row codegen (no shuffle, no state)."""
     from csv_query_engine_spark.pipeline.validation import split_by_rules
 
     good, bad = split_by_rules(batch_df, checks)
     for side, path in ((good, good_path), (bad, quarantine_path)):
         _write_batch(side, path, batch_id)
-
-
-def quality_gate_stream(
-    stream: DataFrame,
-    checks,
-    good_path: str,
-    quarantine_path: str,
-    checkpoint: str,
-):
-    """Streaming dead-letter routing: every micro-batch splits by the
-    row-level constraints (pipeline/validation.py::split_by_rules) —
-    passing rows land in ``good_path``, violating rows in
-    ``quarantine_path`` WITH their ``failed_rules`` — so bad data parks
-    for repair instead of poisoning downstream state or failing the
-    query. foreachBatch alone is at-least-once; the per-batch dynamic
-    partition overwrite in :func:`route_quality_batch` makes a replayed
-    batch a rewrite of its own partition, which upgrades the
-    END-TO-END result (checkpoint offsets + idempotent sink) to
-    effectively-once.
-
-    Scale: the split is pure per-row codegen (no shuffle, no state);
-    the only state is the source offsets in the checkpoint. This is the
-    streaming face of the quality layer: check_constraints gates a
-    BATCH before publication, split_by_rules routes a STREAM row by
-    row."""
-    return _run_batches(
-        stream, checkpoint, route_quality_batch,
-        checks=checks, good_path=good_path, quarantine_path=quarantine_path,
-    )
 
 
 def route_admission_batch(
@@ -666,7 +661,12 @@ def route_admission_batch(
     fingerprint + span-blocked near-dup via
     pipeline/dedup.py::incremental_dedup), collapse exact duplicates
     WITHIN the batch (min doc_id survives), and write both sides keyed
-    by ``batch_id`` with dynamic partition overwrite.
+    by ``batch_id`` with dynamic partition overwrite — the streaming
+    face of the dedup family (the continuously-fed curation pipeline:
+    each crawl slice screens against everything already ingested
+    before joining the corpus), so the admitted store grows only by
+    novel documents and every rejection is parked with its verdict and
+    the id it duplicates.
 
     Replay contract (the quality-gate idiom, :func:`route_quality_batch`):
     the admitted-corpus read FILTERS ``batch_id < current`` — a replayed
@@ -687,6 +687,7 @@ def route_admission_batch(
     """
     from pyspark.sql import functions as SF
 
+    from csv_query_engine_spark.pipeline import cache_scope
     from csv_query_engine_spark.pipeline.dedup import incremental_dedup
     from csv_query_engine_spark.pipeline.text import fingerprint
 
@@ -712,37 +713,19 @@ def route_admission_batch(
         .filter(SF.col("batch_id") < int(batch_id))
         .select("doc_id", "text")
     )
-    verdicts = incremental_dedup(batch_kept, corpus, threshold=threshold)
-    admitted = batch_kept.join(
-        verdicts.filter(SF.col("verdict") == "admit").select("doc_id"), "doc_id"
-    )
-    rejected = verdicts.filter(SF.col("verdict") != "admit").unionByName(
-        batch_exact_dropped
-    )
-    for side, path in ((admitted, admitted_dir), (rejected, rejected_dir)):
-        _write_batch(side, path, batch_id)
-
-
-def dedup_admission_stream(
-    stream: DataFrame,
-    admitted_dir: str,
-    rejected_dir: str,
-    checkpoint: str,
-    threshold: float = 0.5,
-):
-    """Streaming near-duplicate ADMISSION — the streaming face of the
-    dedup family (the continuously-fed curation pipeline: each crawl
-    slice screens against everything already ingested before joining
-    the corpus): foreachBatch routes every micro-batch through
-    :func:`route_admission_batch`, so the admitted store grows only by
-    novel documents and every rejection is parked with its verdict and
-    the id it duplicates. Checkpoint offsets + batch_id-keyed dynamic
-    partition overwrites + the pre-batch corpus filter make the result
-    effectively-once under replay."""
-    return _run_batches(
-        stream, checkpoint, route_admission_batch,
-        admitted_dir=admitted_dir, rejected_dir=rejected_dir, threshold=threshold,
-    )
+    # incremental_dedup persists its token and candidate tables and
+    # leaves their lifetime to the caller: the batch owns them, so they
+    # are released once both sides are written
+    with cache_scope(spark):
+        verdicts = incremental_dedup(batch_kept, corpus, threshold=threshold)
+        admitted = batch_kept.join(
+            verdicts.filter(SF.col("verdict") == "admit").select("doc_id"), "doc_id"
+        )
+        rejected = verdicts.filter(SF.col("verdict") != "admit").unionByName(
+            batch_exact_dropped
+        )
+        for side, path in ((admitted, admitted_dir), (rejected, rejected_dir)):
+            _write_batch(side, path, batch_id)
 
 
 # ------------------------------------- bucket-MIN admission (one core)
@@ -1096,28 +1079,6 @@ def route_minhash_admission_batch(
     )
 
 
-def minhash_admission_stream(
-    stream: DataFrame,
-    store_dir: str,
-    checkpoint: str,
-    threshold: float = 0.5,
-    **kwargs,
-):
-    """Streaming MinHash admission: foreachBatch routes every
-    micro-batch through :func:`route_minhash_admission_batch` — the
-    linear (bucket-MIN) dedup face running continuously, completing the
-    family's batch/streaming symmetry (CM/HLL/HDR/BM25/centroid/vocab
-    have stream wrappers too; census and contamination expose their
-    per-batch ``route_*`` functions for a caller's foreachBatch).
-    Checkpoint offsets +
-    batch_id-keyed dynamic overwrite + the pre-batch read guard make it
-    effectively-once under replay."""
-    return _run_batches(
-        stream, checkpoint, route_minhash_admission_batch,
-        store_dir=store_dir, threshold=threshold, **kwargs,
-    )
-
-
 def read_minhash_bucket_mins(
     spark: SparkSession, store_dir: str, hash_mode: str = "xxhash64"
 ) -> DataFrame:
@@ -1339,26 +1300,6 @@ def route_semantic_admission_batch(
     )
     _route_bucket_min_batch(
         batch, batch_id, store_dir, _semantic_family(n_planes, n_bands, dim), threshold
-    )
-
-
-def semantic_admission_stream(
-    stream: DataFrame,
-    store_dir: str,
-    checkpoint: str,
-    threshold: float = 0.92,
-    **kwargs,
-):
-    """Streaming semantic admission: foreachBatch routes every
-    micro-batch through :func:`route_semantic_admission_batch` — the
-    embedding dedup family's streaming face, completing its
-    batch/streaming symmetry the way :func:`minhash_admission_stream`
-    did for token space.  Checkpoint offsets + batch_id-keyed dynamic
-    overwrite + the pre-batch read guard make it effectively-once
-    under replay."""
-    return _run_batches(
-        stream, checkpoint, route_semantic_admission_batch,
-        store_dir=store_dir, threshold=threshold, **kwargs,
     )
 
 
@@ -1607,34 +1548,18 @@ def route_cm_batch(
     double-counting — the round-7/8 replay idiom. Merging is the
     sketch's own contract: cells are additive, so the read side SUMs
     across batch partitions (:func:`read_cm_cells`); no per-key state
-    lives in the checkpoint at all, only source offsets."""
+    lives in the checkpoint at all, only source offsets.
+
+    The bounded-state answer to "how often has key k appeared so far?"
+    when the key dictionary is too large for per-key state — contrast
+    running_user_totals (exact, per-key state) and
+    streaming_heavy_hitters (top-k only): the CM store is
+    O(depth×width×batches) no matter the key cardinality, and
+    compacting old batch partitions into one is the same SUM."""
     from csv_query_engine_spark.pipeline.sketches import cm_cells
 
     cells = cm_cells(batch_df.select(key_col), key_col, depth=depth, width=width)
     _write_batch(cells, cells_path, batch_id)
-
-
-def cm_sketch_stream(
-    stream: DataFrame,
-    key_col: str,
-    cells_path: str,
-    checkpoint: str,
-    depth: int = 4,
-    width: int = 64,
-):
-    """Streaming Count-Min frequency sketch: every micro-batch folds
-    into a bounded per-batch cell table (:func:`route_cm_batch`);
-    estimates come from the SUM-merged cells at read time.  The
-    bounded-state streaming answer to "how often has key k appeared so
-    far?" when the key dictionary is too large for per-key state —
-    contrast running_user_totals (exact, per-key state) and
-    streaming_heavy_hitters (top-k only): the CM store is
-    O(depth×width×batches) no matter the key cardinality, and
-    compacting old batch partitions into one is the same SUM."""
-    return _run_batches(
-        stream, checkpoint, route_cm_batch,
-        key_col=key_col, cells_path=cells_path, depth=depth, width=width,
-    )
 
 
 def read_cm_cells(spark: SparkSession, cells_path: str) -> DataFrame:
@@ -1659,6 +1584,9 @@ def route_hll_batch(
     registers are deterministic md5 arithmetic). Merge is the sketch's
     contract: registers combine by MAX across batches
     (:func:`read_hll_registers`), the dual of the Count-Min cells' SUM.
+    State is bounded (m rows per group per batch) with NO per-key
+    stream state; duplicates across batches cannot move any register,
+    so the merged estimate equals the one-shot batch estimate exactly.
 
     The group column is cast to STRING on write so the reader's
     explicit schema (the zero-batch lesson) holds for ANY group type —
@@ -1673,25 +1601,6 @@ def route_hll_batch(
         p=p,
     )
     _write_batch(regs, regs_path, batch_id)
-
-
-def hll_sketch_stream(
-    stream: DataFrame,
-    key_col: str,
-    group_col: str,
-    regs_path: str,
-    checkpoint: str,
-    p: int = 8,
-):
-    """Streaming distinct-count sketch: per-group HLL registers folded
-    per micro-batch, MAX-merged at read time — bounded state (m rows
-    per group per batch) with NO per-key stream state; duplicates
-    across batches cannot move any register, so the merged estimate
-    equals the one-shot batch estimate exactly."""
-    return _run_batches(
-        stream, checkpoint, route_hll_batch,
-        key_col=key_col, group_col=group_col, regs_path=regs_path, p=p,
-    )
 
 
 def read_hll_registers(spark: SparkSession, regs_path: str, group_col: str) -> DataFrame:
@@ -1722,32 +1631,14 @@ def route_bm25_batch(
     idiom; the CM/HLL sketch-build contract applied to retrieval
     stats).  df/doclen/avgdl are NOT stored: they derive from the
     merged postings at read time, so they can never drift from the
-    postings that produced them."""
+    postings that produced them.  Scoring reads the merged index
+    (:func:`read_bm25_postings` → retrieval.bm25_topk_from_postings —
+    the SAME scoring core the batch operator uses, so stream-built ==
+    batch-built by construction)."""
     from csv_query_engine_spark.pipeline.retrieval import doc_term_frequencies
 
     tf = doc_term_frequencies(batch_df, id_col=id_col, text_col=text_col)
     _write_batch(tf.withColumn("id", F.col("id").cast("long")), postings_path, batch_id)
-
-
-def bm25_index_stream(
-    stream: DataFrame,
-    postings_path: str,
-    checkpoint: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-):
-    """Streaming BM25 index maintenance: every document micro-batch
-    folds into its own postings partition (:func:`route_bm25_batch`);
-    scoring reads the merged index (:func:`read_bm25_postings` →
-    retrieval.bm25_topk_from_postings — the SAME scoring core the
-    batch operator uses, so stream-built == batch-built by
-    construction).  Checkpoint state is source offsets only — the
-    index lives in the partitioned store, mergeable and compactable
-    (concatenating batch partitions is the merge)."""
-    return _run_batches(
-        stream, checkpoint, route_bm25_batch,
-        postings_path=postings_path, id_col=id_col, text_col=text_col,
-    )
 
 
 def read_bm25_postings(spark: SparkSession, postings_path: str) -> DataFrame:
@@ -1773,27 +1664,11 @@ def route_hdr_batch(
     byte-identically — deterministic integer bucketing).  Merging is
     the sketch's contract: buckets are additive, so the read side SUMs
     across batch partitions (:func:`read_hdr_buckets`) — the Count-Min
-    idiom for order statistics."""
+    idiom for order statistics.  Quantile estimates from the merged
+    sketch equal the one-shot batch build exactly."""
     from csv_query_engine_spark.pipeline.sketches import hdr_buckets
 
     _write_batch(hdr_buckets(batch_df, value_col, sub_bits=sub_bits), buckets_path, batch_id)
-
-
-def hdr_sketch_stream(
-    stream: DataFrame,
-    value_col: str,
-    buckets_path: str,
-    checkpoint: str,
-    sub_bits: int = 5,
-):
-    """Streaming quantile sketch: per-batch HDR bucket tables,
-    SUM-merged at read time — bounded state with NO per-key stream
-    state; quantile estimates from the merged sketch equal the
-    one-shot batch build exactly (deterministic integer buckets)."""
-    return _run_batches(
-        stream, checkpoint, route_hdr_batch,
-        value_col=value_col, buckets_path=buckets_path, sub_bits=sub_bits,
-    )
 
 
 def read_hdr_buckets(spark: SparkSession, buckets_path: str) -> DataFrame:
@@ -1918,19 +1793,6 @@ def route_entity_admission_batch(
     finally:
         batch.unpersist()
         inc_vars.unpersist()
-
-
-def entity_admission_stream(
-    stream: DataFrame, store_dir: str, checkpoint: str, **match_kwargs
-):
-    """Streaming entity admission: each record micro-batch is matched
-    against everything admitted before it and appended with its
-    verdict (:func:`route_entity_admission_batch`).  Checkpoint state
-    is source offsets only; the store (records + precomputed name
-    variants) lives in the batch_id-partitioned tables."""
-    return _run_batches(
-        stream, checkpoint, route_entity_admission_batch, store_dir=store_dir, **match_kwargs
-    )
 
 
 # ------------------------------------------------ streaming join-view IVM
@@ -2138,7 +2000,7 @@ def join_view_stream(
                 max_files_per_bucket=max_files_per_bucket,
             )
 
-    return _run_batches(stream, checkpoint, route)
+    return run_batches(stream, checkpoint, route)
 
 
 def route_join_view_dim_batch(
@@ -2374,22 +2236,6 @@ def route_centroid_batch(
     _write_batch(state, store_dir, batch_id)
 
 
-def centroid_stream(
-    stream: DataFrame,
-    store_dir: str,
-    checkpoint: str,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-):
-    """Streaming per-label centroid maintenance via foreachBatch →
-    :func:`route_centroid_batch`; effectively-once under replay (the
-    idiom)."""
-    return _run_batches(
-        stream, checkpoint, route_centroid_batch,
-        store_dir=store_dir, label_col=label_col, vec_col=vec_col,
-    )
-
-
 def read_merged_centroids(spark: SparkSession, store_dir: str) -> DataFrame:
     """SUM-merge every batch's centroid state into exact whole-stream
     per-label centroids — BIT-IDENTICAL to
@@ -2532,21 +2378,6 @@ def route_vocab_batch(
         .agg(F.count(F.lit(1)).alias("n"))
     )
     _write_batch(hist, store_dir, batch_id)
-
-
-def vocab_stream(
-    stream: DataFrame,
-    store_dir: str,
-    checkpoint: str,
-    text_col: str = "text",
-    n_buckets: int = 1024,
-):
-    """Streaming vocabulary-histogram maintenance via foreachBatch →
-    :func:`route_vocab_batch`; effectively-once under replay."""
-    return _run_batches(
-        stream, checkpoint, route_vocab_batch,
-        store_dir=store_dir, text_col=text_col, n_buckets=n_buckets,
-    )
 
 
 def read_vocab_drift(

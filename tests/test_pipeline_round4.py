@@ -305,70 +305,6 @@ def test_exclusive_bucket_offsets_three_level_hierarchy(spark):
         run += v
 
 
-def test_token_budget_approx_is_prefix_of_exact(spark):
-    """The sort-free two-pass variant must (a) never exceed the budget,
-    (b) select a SUBSET of the exact form's kept set (its bucket prefix
-    is a prefix of the exact hash order), and (c) fill most of the
-    budget when buckets are fine enough."""
-    from pyspark.sql import functions as F
-
-    from csv_query_engine_spark.pipeline.sampling import (
-        token_budget_sample,
-        token_budget_sample_approx,
-    )
-
-    df = spark.createDataFrame(
-        [(i, "s%d" % (i % 3), 10 + i % 7) for i in range(3000)], "id long, st string, w long"
-    )
-    budget = 2000
-    exact = token_budget_sample(df, "st", F.col("id"), F.col("w"), budget)
-    approx = token_budget_sample_approx(
-        df, "st", F.col("id"), F.col("w"), budget, n_buckets=1024
-    )
-    ex_tot = {r["st"]: r["t"] for r in exact.groupBy("st").agg(F.sum("w").alias("t")).collect()}
-    ap_tot = {r["st"]: r["t"] for r in approx.groupBy("st").agg(F.sum("w").alias("t")).collect()}
-    for st, t in ap_tot.items():
-        assert t <= budget, (st, t)
-        assert t >= 0.8 * ex_tot[st], (st, t, ex_tot[st])
-    ex_ids = {(r["st"], r["id"]) for r in exact.collect()}
-    ap_ids = {(r["st"], r["id"]) for r in approx.collect()}
-    # subset up to the exact form's single boundary document: every
-    # approx-kept doc is exact-kept except possibly docs sharing the
-    # boundary bucket — with 1024 buckets over 1000 rows/stratum the
-    # overwhelming majority must coincide
-    assert len(ap_ids - ex_ids) <= 3 * len(ex_tot), len(ap_ids - ex_ids)
-    assert len(ap_ids & ex_ids) >= 0.8 * len(ap_ids)
-
-
-def test_token_budget_approx_no_corpus_sort(spark, tmp_path):
-    """The corpus subtree must carry no sort and no window — only the
-    bucket histogram (tiny) is windowed."""
-    import contextlib
-    import io
-
-    from pyspark.sql import functions as F
-
-    from csv_query_engine_spark.pipeline.sampling import token_budget_sample_approx
-
-    p = str(tmp_path / "c.parquet")
-    spark.createDataFrame(
-        [(i, "s", 5) for i in range(100)], "id long, st string, w long"
-    ).write.mode("overwrite").parquet(p)
-    out = token_budget_sample_approx(
-        spark.read.parquet(p), "st", F.col("id"), F.col("w"), 300
-    )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain("formatted")
-    plan = buf.getvalue()
-    # exactly one Window node (the bucket-table running sum), and the
-    # final kept-rows output is produced by a broadcast join + filter
-    import re
-
-    assert len(re.findall(r"\(\d+\) Window", plan)) <= 1, plan
-    assert "BroadcastHashJoin" in plan, plan
-
-
 def test_allpairs_equals_bruteforce_with_planted_neardups(spark):
     """The prefix filter must lose NOTHING: planted near-duplicate pairs
     and random chaff produce identical (pair, jaccard) sets from the

@@ -639,7 +639,7 @@ def test_quality_gate_stream_dead_letter_routing(spark, tmp_path):
     from pyspark.sql import types as T
 
     from csv_query_engine_spark.pipeline.validation import Check
-    from csv_query_engine_spark.streaming import quality_gate_stream
+    from csv_query_engine_spark.streaming.events import route_quality_batch, run_batches
 
     schema = T.StructType(
         [
@@ -665,7 +665,10 @@ def test_quality_gate_stream_dead_letter_routing(spark, tmp_path):
 
     def run_once():
         stream = spark.readStream.schema(schema).parquet(d)
-        q = quality_gate_stream(stream, checks, good_p, bad_p, ckpt)
+        q = run_batches(
+            stream, ckpt, route_quality_batch,
+            checks=checks, good_path=good_p, quarantine_path=bad_p,
+        )
         q.awaitTermination(120)
 
     run_once()
@@ -872,8 +875,9 @@ def test_minhash_admission_live_stream_restart(spark, tmp_path):
     passes over a growing directory; the second pass folds only the new
     file and its docs verdict against the first pass's bucket mins."""
     from csv_query_engine_spark.streaming.events import (
-        minhash_admission_stream,
         read_minhash_verdicts,
+        route_minhash_admission_batch,
+        run_batches,
     )
 
     src = tmp_path / "src"
@@ -883,7 +887,7 @@ def test_minhash_admission_live_stream_restart(spark, tmp_path):
         "doc_id long, text string",
     ).write.parquet(str(src))
     stream = spark.readStream.schema("doc_id long, text string").parquet(str(src))
-    q = minhash_admission_stream(stream, store, ckpt, threshold=0.5)
+    q = run_batches(stream, ckpt, route_minhash_admission_batch, store_dir=store, threshold=0.5)
     q.awaitTermination(120)
     v0 = {r["doc_id"]: r["is_dup"] for r in read_minhash_verdicts(spark, store).collect()}
     assert v0 == {1: False, 2: False}
@@ -894,7 +898,7 @@ def test_minhash_admission_live_stream_restart(spark, tmp_path):
         "doc_id long, text string",
     ).write.mode("append").parquet(str(src))
     stream = spark.readStream.schema("doc_id long, text string").parquet(str(src))
-    q = minhash_admission_stream(stream, store, ckpt, threshold=0.5)
+    q = run_batches(stream, ckpt, route_minhash_admission_batch, store_dir=store, threshold=0.5)
     q.awaitTermination(120)
     v1 = {
         r["doc_id"]: (r["is_dup"], r["dup_of"])
@@ -908,24 +912,65 @@ def test_dedup_admission_live_stream(spark, tmp_path):
     """End-to-end through a real file-source stream: two availableNow
     passes over a growing directory land in the admitted store exactly
     once each."""
-    from csv_query_engine_spark.streaming.events import dedup_admission_stream
+    from csv_query_engine_spark.streaming.events import route_admission_batch, run_batches
 
     src = tmp_path / "src"
     adm, rej = str(tmp_path / "admitted"), str(tmp_path / "rejected")
     ckpt = str(tmp_path / "ckpt")
     spark.createDataFrame([(1, BASE_DOC), (2, "other text entirely")], "doc_id long, text string").write.parquet(str(src))
     stream = spark.readStream.schema("doc_id long, text string").parquet(str(src))
-    q = dedup_admission_stream(stream, adm, rej, ckpt)
+    q = run_batches(stream, ckpt, route_admission_batch, admitted_dir=adm, rejected_dir=rej)
     q.awaitTermination(120)
     assert {r["doc_id"] for r in spark.read.parquet(adm).collect()} == {1, 2}
     # second slice: an exact dup of doc 1 plus a novel doc
     spark.createDataFrame([(3, BASE_DOC), (4, "brand new words")], "doc_id long, text string").write.mode("append").parquet(str(src))
     stream = spark.readStream.schema("doc_id long, text string").parquet(str(src))
-    q = dedup_admission_stream(stream, adm, rej, ckpt)
+    q = run_batches(stream, ckpt, route_admission_batch, admitted_dir=adm, rejected_dir=rej)
     q.awaitTermination(120)
     assert {r["doc_id"] for r in spark.read.parquet(adm).collect()} == {1, 2, 4}
     rejs = {r["doc_id"]: r["verdict"] for r in spark.read.parquet(rej).collect()}
     assert rejs == {3: "exact_dup"}
+
+
+def _persistent_rdd_ids(spark):
+    """Ids of every persistent RDD the driver tracks (cached tables and
+    localCheckpoint blocks alike)."""
+    sc = spark.sparkContext
+    return {
+        int(rid)
+        for rid in sc._jvm.scala.collection.JavaConverters.mapAsJavaMap(
+            sc._jsc.sc().getPersistentRDDs()
+        ).keys()
+    }
+
+
+def test_dedup_admission_route_releases_its_caches(spark, tmp_path):
+    """incremental_dedup persists and pins its token and candidate
+    tables and leaves their lifetime to the caller; the admission route
+    is that caller, so after EVERY routed batch (first batch, cross-
+    batch near and exact dups, novel docs) no persistent RDD may exist
+    that did not exist before the first — a long admission stream would
+    otherwise grow its cached blocks batch after batch.  Ids that vanish
+    (the context cleaner releasing an earlier test's blocks) are not a
+    leak, so the check is on new ids only."""
+    from csv_query_engine_spark.streaming.events import route_admission_batch
+
+    adm, rej = str(tmp_path / "admitted"), str(tmp_path / "rejected")
+    near = BASE_DOC.replace("oscar", "sierra")
+    batches = [
+        [(1, BASE_DOC), (2, "other text entirely unrelated words")],
+        [(3, near), (4, "brand new words nothing shared here at all")],
+        [(5, BASE_DOC), (6, "a fifth slice of fresh words")],
+        [(7, near), (8, "other text entirely unrelated words")],
+    ]
+    cached_before = _persistent_rdd_ids(spark)
+    for batch_id, rows in enumerate(batches):
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        route_admission_batch(df, batch_id, adm, rej)
+        leaked = _persistent_rdd_ids(spark) - cached_before
+        assert not leaked, f"batch {batch_id} leaked persisted blocks: {leaked}"
+    admitted = {r["doc_id"] for r in spark.read.parquet(adm).collect()}
+    assert admitted == {1, 2, 4, 6}, admitted
 
 
 def test_cm_sketch_stream_matches_batch_and_replay_is_noop(spark, tmp_path):
@@ -939,9 +984,9 @@ def test_cm_sketch_stream_matches_batch_and_replay_is_noop(spark, tmp_path):
 
     from csv_query_engine_spark.pipeline.sketches import cm_cells, cm_estimates
     from csv_query_engine_spark.streaming import (
-        cm_sketch_stream,
         read_cm_cells,
         route_cm_batch,
+        run_batches,
     )
 
     schema = T.StructType([T.StructField("user_id", T.LongType())])
@@ -953,7 +998,10 @@ def test_cm_sketch_stream_matches_batch_and_replay_is_noop(spark, tmp_path):
 
     def run_once():
         stream = spark.readStream.schema(schema).parquet(staged)
-        q = cm_sketch_stream(stream, "user_id", cells_p, ckpt, depth=4, width=8)
+        q = run_batches(
+            stream, ckpt, route_cm_batch,
+            key_col="user_id", cells_path=cells_p, depth=4, width=8,
+        )
         q.awaitTermination(120)
 
     run_once()
@@ -1002,9 +1050,9 @@ def test_hll_sketch_stream_matches_batch_and_replay_is_noop(spark, tmp_path):
         hll_estimate_from_registers,
     )
     from csv_query_engine_spark.streaming import (
-        hll_sketch_stream,
         read_hll_registers,
         route_hll_batch,
+        run_batches,
     )
 
     schema = T.StructType(
@@ -1018,7 +1066,9 @@ def test_hll_sketch_stream_matches_batch_and_replay_is_noop(spark, tmp_path):
 
     def run_once():
         stream = spark.readStream.schema(schema).parquet(staged)
-        q = hll_sketch_stream(stream, "k", "g", regs_p, ckpt)
+        q = run_batches(
+            stream, ckpt, route_hll_batch, key_col="k", group_col="g", regs_path=regs_p
+        )
         q.awaitTermination(120)
 
     run_once()
@@ -1081,9 +1131,9 @@ def test_bm25_index_stream_matches_batch_replay_noop_and_freshness(spark, tmp_pa
         bm25_topk_from_postings,
     )
     from csv_query_engine_spark.streaming import (
-        bm25_index_stream,
         read_bm25_postings,
         route_bm25_batch,
+        run_batches,
     )
 
     schema = T.StructType(
@@ -1097,7 +1147,7 @@ def test_bm25_index_stream_matches_batch_replay_noop_and_freshness(spark, tmp_pa
 
     def run_once():
         stream = spark.readStream.schema(schema).parquet(staged)
-        q = bm25_index_stream(stream, postings_p, ckpt)
+        q = run_batches(stream, ckpt, route_bm25_batch, postings_path=postings_p)
         q.awaitTermination(120)
 
     run_once()
@@ -1162,9 +1212,9 @@ def test_hdr_sketch_stream_matches_batch_and_replay_is_noop(spark, tmp_path):
 
     from csv_query_engine_spark.pipeline.sketches import hdr_buckets, hdr_quantiles
     from csv_query_engine_spark.streaming import (
-        hdr_sketch_stream,
         read_hdr_buckets,
         route_hdr_batch,
+        run_batches,
     )
 
     schema = T.StructType([T.StructField("v", T.LongType())])
@@ -1176,7 +1226,7 @@ def test_hdr_sketch_stream_matches_batch_and_replay_is_noop(spark, tmp_path):
 
     def run_once():
         stream = spark.readStream.schema(schema).parquet(staged)
-        q = hdr_sketch_stream(stream, "v", bp, ckpt)
+        q = run_batches(stream, ckpt, route_hdr_batch, value_col="v", buckets_path=bp)
         q.awaitTermination(120)
 
     run_once()
@@ -1215,21 +1265,12 @@ def test_entity_admission_stream_verdicts_restart_and_replay(spark, tmp_path):
     alongside the HTTP-route pin in test_http)."""
     from pyspark.sql import types as T
 
-    def _persistent_ids():
-        sc = spark.sparkContext
-        return {
-            int(rid)
-            for rid in sc._jvm.scala.collection.JavaConverters.mapAsJavaMap(
-                sc._jsc.sc().getPersistentRDDs()
-            ).keys()
-        }
-
-    cached_before = _persistent_ids()
+    cached_before = _persistent_rdd_ids(spark)
 
     from csv_query_engine_spark.streaming import (
-        entity_admission_stream,
         read_entity_store,
         route_entity_admission_batch,
+        run_batches,
     )
 
     schema = T.StructType(
@@ -1260,7 +1301,7 @@ def test_entity_admission_stream_verdicts_restart_and_replay(spark, tmp_path):
 
     def run_once():
         stream = spark.readStream.schema(schema).parquet(staged)
-        q = entity_admission_stream(stream, store, ckpt)
+        q = run_batches(stream, ckpt, route_entity_admission_batch, store_dir=store)
         q.awaitTermination(120)
 
     run_once()
@@ -1286,7 +1327,7 @@ def test_entity_admission_stream_verdicts_restart_and_replay(spark, tmp_path):
     after, _ = read_entity_store(spark, store)
     assert sorted(tuple(r) for r in after.collect()) == before
 
-    leaked = _persistent_ids() - cached_before
+    leaked = _persistent_rdd_ids(spark) - cached_before
     assert not leaked, f"admission cycle leaked persisted blocks: {leaked}"
 
 
@@ -2586,7 +2627,8 @@ def test_semantic_admission_live_stream_restart(spark, tmp_path):
     from csv_query_engine_spark.pipeline.similarity import semantic_dedup_survivors
     from csv_query_engine_spark.streaming.events import (
         read_semantic_verdicts,
-        semantic_admission_stream,
+        route_semantic_admission_batch,
+        run_batches,
     )
 
     src = tmp_path / "src"
@@ -2605,7 +2647,9 @@ def test_semantic_admission_live_stream_restart(spark, tmp_path):
             .option("maxFilesPerTrigger", "1")
             .parquet(str(src / "*"))
         )
-        q = semantic_admission_stream(stream, store, ckpt, threshold=0.92)
+        q = run_batches(
+            stream, ckpt, route_semantic_admission_batch, store_dir=store, threshold=0.92
+        )
         q.awaitTermination(120)
 
     run_pass()
